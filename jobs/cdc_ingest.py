@@ -3,8 +3,8 @@
 Tails a directory of change-event parquet batches (the binlog/WAL analog;
 swap for `readStream.format("kafka")` + `from_json` on a real bus), applies
 the transform-rule pipeline, LWW-dedups, MERGE-upserts into the snapshot
-table exactly-once, and appends metrics/lineage — resumable from the
-checkpoint at any kill point.
+table exactly-once, with each batch's metrics/lineage recorded in its commit —
+resumable from the checkpoint at any kill point.
 
 Usage:
     cd <repo> && zip -qr /tmp/pyetl_spark.zip pyetl_spark

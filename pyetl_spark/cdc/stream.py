@@ -13,10 +13,13 @@ traitement_conditions.py:825-988) and streaming writes
     1. apply the transform-rule pipeline (vectorized Columns / pandas UDFs),
     2. LWW-dedup + MERGE into the SnapshotTable keyed (repo, path) —
        idempotent via the committed-batch ledger (``stream:<epochId>``), so
-       Spark's at-least-once foreachBatch redelivery becomes exactly-once,
-    3. append batch metrics + per-bucket lineage rows.
+       Spark's at-least-once foreachBatch redelivery becomes exactly-once.
+       The commit's summary carries the batch metrics and per-bucket
+       lineage (``cdc.metrics.read_metrics``/``read_lineage``), so they
+       land exactly once with the data and need no job of their own.
 - watermark bookkeeping: the table's ``max_seq()`` is the replay watermark
-  (reference: ``dbmaxval`` traitement_db.py:848-885).
+  (reference: ``dbmaxval`` traitement_db.py:848-885), kept in the manifest
+  by every commit.
 
 At cluster scale the same code runs against a Kafka/binlog source — the
 source swap is one line (``readStream.format("kafka")`` + from_json), the
@@ -31,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from pyetl_spark.cdc.datagen import EVENT_SCHEMA
-from pyetl_spark.cdc.metrics import record_batch_metrics, record_lineage
+from pyetl_spark.cdc.metrics import record_batch_metrics, record_lineage  # noqa: F401 (no-ops, kept importable)
 from pyetl_spark.cdc.tableio import SnapshotTable
 
 
@@ -45,7 +48,6 @@ class StreamingIngest:
         transform: Callable[[DataFrame], DataFrame] | None = None,
         schema: str = EVENT_SCHEMA,
         max_files_per_trigger: int = 4,
-        with_lineage: bool = True,
         processing_time: str | None = None,
         reader_factory: Callable[[SparkSession], DataFrame] | None = None,
     ):
@@ -56,7 +58,6 @@ class StreamingIngest:
         self.transform = transform
         self.schema = schema
         self.max_files_per_trigger = max_files_per_trigger
-        self.with_lineage = with_lineage
         # polling-cadence trigger (the reference's minute-granularity
         # calendar triggers, is:valid_date/time traitement_conditions.py:
         # 825-988, recast as Trigger.ProcessingTime). None = availableNow:
@@ -103,19 +104,7 @@ class StreamingIngest:
         batch_id = f"stream:{epoch_id}"
         self.batches_seen.append(batch_id)
         df = self._apply_transform(batch_df, epoch_id)
-        stats = self.table.merge(df, batch_id=batch_id, with_stats=True)
-        record_batch_metrics(self.spark, self.table.root, stats)
-        if self.with_lineage and not stats.skipped and stats.events_in:
-            m = self.table.manifest()
-            record_lineage(
-                self.spark,
-                self.table.root,
-                df,
-                keys=m["keys"],
-                nbuckets=m["nbuckets"],
-                batch_id=batch_id,
-                version=stats.version,
-            )
+        self.table.merge(df, batch_id=batch_id, with_stats=True)
 
     # ---------------------------------------------------------------- driver
 

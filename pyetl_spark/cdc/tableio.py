@@ -67,7 +67,7 @@ import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pyetl_spark.cdc.dedup import lww_dedup
@@ -535,6 +535,26 @@ def _evolve_schema_json(
     return StructType(out).json()
 
 
+def _write_json(path: str, obj) -> None:
+    """write-fsync-rename: readers see the whole file or none of it."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _commit_record(m: dict) -> dict:
+    """The part of a manifest that outlives it in the summary archive."""
+    return {
+        "version": m["version"],
+        "parent": m.get("parent"),
+        "committed_ts": float(m.get("committed_ts") or m.get("created_ts") or 0.0),
+        "summary": m.get("summary") or {},
+    }
+
+
 @dataclass
 class MergeStats:
     batch_id: str | None
@@ -542,11 +562,12 @@ class MergeStats:
     events_in: int
     keys_after_dedup: int
     buckets_touched: int
-    rows_written: int
+    rows_written: int  # rows in the files the commit wrote
     skipped: bool = False
     wall_ms: int = 0
     mode: str = "cow"
     buckets_migrated: int = 0  # legacy-spec buckets folded in (rescale window)
+    files_written: int = 0
 
 
 class SnapshotTable:
@@ -611,6 +632,7 @@ class SnapshotTable:
             "buckets": {},
             "committed_batches": {},
             "batch_hwm": {},
+            "max_seq": -1,
             "parent": None,
             "created_ts": time.time(),
             "summary": {"operation": "create"},
@@ -629,13 +651,7 @@ class SnapshotTable:
         return os.path.join(self.root, "_versions", f"v{version:08d}.json")
 
     def _write_manifest(self, manifest: dict) -> None:
-        path = self._manifest_path(manifest["version"])
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
+        _write_json(self._manifest_path(manifest["version"]), manifest)
 
     def _commit_manifest(self, manifest: dict) -> None:
         """Atomic commit arbitration (ADVICE r01): exclusively create the
@@ -693,12 +709,7 @@ class SnapshotTable:
         ``current+1`` would collide with — and under the old os.replace commit,
         silently clobber — a retained snapshot's manifest and data dir. Races
         on the same number are arbitrated by ``_commit_manifest``'s O_EXCL."""
-        existing = [
-            int(f[1:-5])
-            for f in os.listdir(os.path.join(self.root, "_versions"))
-            if f.startswith("v") and f.endswith(".json")
-        ]
-        return max([planned_against, *existing]) + 1
+        return max([planned_against, *self._retained_versions()]) + 1
 
     def current_version(self) -> int:
         with open(self._pointer_path()) as f:
@@ -1071,6 +1082,23 @@ class SnapshotTable:
             v = self.manifest(v).get("parent")
         return anc
 
+    def commit_summaries(self) -> list[dict]:
+        """``{version, parent, committed_ts, summary}`` per commit, sorted by
+        version: every retained manifest plus the records
+        :meth:`expire_snapshots` archived before unlinking theirs. A crash
+        between archiving and unlinking leaves a version in both places;
+        the manifest wins, so each version appears once."""
+        out = {}
+        adir = os.path.join(self.root, "_summary_archive")
+        if os.path.isdir(adir):
+            for f in sorted(os.listdir(adir)):
+                if f.endswith(".json"):
+                    with open(os.path.join(adir, f)) as fh:
+                        out.update((r["version"], r) for r in json.load(fh))
+        for v in self._retained_versions():
+            out[v] = _commit_record(self.manifest(v))
+        return [out[v] for v in sorted(out)]
+
     def history_df(self) -> DataFrame:
         """One row per retained version: the commit log (`table$history`)."""
         anc = self._current_ancestors()
@@ -1115,7 +1143,9 @@ class SnapshotTable:
         """One row per retained version with its summary + aggregate file
         metrics (`table$snapshots`). ``total_records`` is the sum of per-file
         footer row counts and is NULL when any live file predates stats
-        tracking (``stats_cols`` / ``track_counts`` props)."""
+        tracking (``stats_cols`` / ``track_counts`` props). Summaries
+        written before ``files_written`` existed stored the file count as
+        ``rows_written``; they read as ``files_written`` with NULL rows."""
         rows = []
         for v in self._retained_versions():
             m = self.manifest(v)
@@ -1128,6 +1158,7 @@ class SnapshotTable:
             total = sum(counts) if counts and all(c is not None for c in counts) else (
                 0 if not files else None
             )
+            old = "rows_written" in s and "files_written" not in s
             rows.append(
                 (
                     v,
@@ -1137,7 +1168,8 @@ class SnapshotTable:
                     s.get("mode"),
                     len(files),
                     total,
-                    s.get("rows_written"),
+                    None if old else s.get("rows_written"),
+                    s.get("rows_written" if old else "files_written"),
                     s.get("events_in"),
                     s.get("buckets_touched"),
                 )
@@ -1146,7 +1178,7 @@ class SnapshotTable:
             rows,
             "version INT, operation STRING, committed_ts DOUBLE, batch_id STRING, "
             "mode STRING, data_files INT, total_records LONG, rows_written LONG, "
-            "events_in LONG, buckets_touched INT",
+            "files_written INT, events_in LONG, buckets_touched INT",
         )
 
     def files_df(self, version: int | None = None) -> DataFrame:
@@ -1299,7 +1331,15 @@ class SnapshotTable:
     def max_seq(self) -> int:
         """Highest applied commit sequence — the reference's ``dbmaxval``
         incremental watermark (traitement_db.py:848-885)."""
-        raw = self.read_raw()
+        return self._seq_watermark(self.manifest())
+
+    def _seq_watermark(self, m: dict) -> int:
+        """``m``'s ``max_seq`` key: every merge stores ``max(parent, batch)``
+        and every other commit copies it forward. Manifests written before
+        the key existed fall back to a scan of their files."""
+        if "max_seq" in m:
+            return m["max_seq"]
+        raw = self.read_raw(version=m["version"])
         if raw is None:
             return -1
         row = raw.agg(F.max(SEQ).alias("m")).first()
@@ -1700,6 +1740,16 @@ class SnapshotTable:
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists: {cons[name]!r}")
         passes = F.expr(expr).eqNullSafe(F.lit(True))  # parse check up front
+        if m.get("schema"):
+            from pyspark.sql.types import StructType
+
+            # a column the schema lacks would commit, then fail every later
+            # merge's constraint check with an opaque AnalysisException
+            self._check_constraints_resolve(
+                {"constraints": {name: expr}},
+                StructType.fromJson(json.loads(m["schema"])),
+                "add constraint",
+            )
         if validate and m.get("schema"):
             bad = self.read(version=m["version"]).filter(~passes).count()
             if bad:
@@ -1811,10 +1861,11 @@ class SnapshotTable:
         return sorted(set(ids))
 
     def _check_constraints_resolve(self, m: dict, candidate_schema, action: str) -> None:
-        """Refuse a schema change that would break a CHECK constraint:
-        analyze each constraint expression against an empty frame with the
-        CANDIDATE schema — exact for the only failure mode a rename/drop
-        can cause (a referenced column no longer resolving)."""
+        """Refuse a schema change, or a new constraint, that would leave a
+        CHECK constraint unresolvable: analyze each constraint expression
+        against an empty frame with the CANDIDATE schema — exact for the
+        only failure mode a rename/drop can cause (a referenced column no
+        longer resolving)."""
         cons = m.get("constraints") or {}
         if not cons:
             return
@@ -1825,8 +1876,9 @@ class SnapshotTable:
             except Exception as exc:
                 raise ValueError(
                     f"cannot {action}: CHECK constraint {name!r} "
-                    f"({expr}) would no longer resolve — drop_constraint "
-                    f"first ({exc.__class__.__name__})"
+                    f"({expr}) does not resolve against the table schema"
+                    + ("" if action == "add constraint" else " — drop_constraint first")
+                    + f" ({exc.__class__.__name__})"
                 ) from exc
 
     def _retired_names(self) -> set[str]:
@@ -2203,11 +2255,7 @@ class SnapshotTable:
         ``jobs/table_maintain.py --orphan-grace`` defaults to 600.
         """
         current = self.current_version()
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(os.path.join(self.root, "_versions"))
-            if f.startswith("v") and f.endswith(".json")
-        )
+        versions = self._retained_versions()
         # named refs pin their versions: a tag or another branch's head must
         # survive expiry no matter how old (Iceberg retention semantics)
         refs = set(self._refs("branch").values()) | set(self._refs("tag").values())
@@ -2224,8 +2272,11 @@ class SnapshotTable:
 
         referenced: set[tuple[str, str, str]] = set()
         ever_referenced: set[tuple[str, str, str]] = set()
+        expired: list[dict] = []
         for v in versions:
             mv = self.manifest(v)
+            if v not in keep:
+                expired.append(_commit_record(mv))
             ids: set[tuple[str, str, str]] = set()
             for files in mv["buckets"].values():
                 ids.update(_file_id(f) for f in files)
@@ -2268,6 +2319,14 @@ class SnapshotTable:
                         os.remove(full + BLOOM_SUFFIX)
                     removed_files += 1
 
+        # the expired commits' summaries (batch metrics + lineage) move to
+        # an append-only archive BEFORE their manifests go, so expiry never
+        # erases telemetry (commit_summaries reads both)
+        if expired:
+            adir = os.path.join(self.root, "_summary_archive")
+            os.makedirs(adir, exist_ok=True)
+            name = f"v{expired[0]['version']:08d}-v{expired[-1]['version']:08d}-{uuid.uuid4().hex[:8]}.json"
+            _write_json(os.path.join(adir, name), expired)
         removed_manifests = 0
         for v in versions:
             if v not in keep:
@@ -2666,6 +2725,7 @@ class SnapshotTable:
             "buckets": {b: _abs(fs) for b, fs in m["buckets"].items()},
             "committed_batches": {},
             "batch_hwm": {},
+            "max_seq": self._seq_watermark(m),
             "parent": None,
             "created_ts": time.time(),
             "summary": {
@@ -2921,11 +2981,14 @@ class SnapshotTable:
         ≤nbuckets rows — also yields events_in for free), one hash-agg
         shuffle for the LWW (in-batch duplicates and cross-snapshot winners
         resolved in the same aggregate; map-side partial combine), one
-        bucket-aligned write. ``with_stats=True`` adds one count for the
-        post-dedup key count (streaming metrics path).
+        bucket-aligned write. The pre-pass also yields the batch facts the
+        commit summary records (per-bucket lineage, max ``_seq``);
+        ``with_stats=True`` adds a per-bucket distinct-key count to it for
+        the post-dedup key count (streaming metrics path).
 
         ``prune=False`` skips the bucket-count pre-pass entirely (touched :=
-        every bucket; events_in observed during the write job). Right when
+        every bucket; events_in and max ``_seq`` observed during the write
+        job, no per-bucket lineage, ``with_stats`` costs a separate count). Right when
         the batch is known to span the keyspace — bulk replay/backfill —
         where pruning buys nothing and the extra job is pure fixed cost.
         Keep the default for streaming tails, whose small batches hit few
@@ -2986,16 +3049,35 @@ class SnapshotTable:
         if cons:
             eval_frame, viol_flags = _constraint_flags(normalized, cons, m.get("schema"))
 
+        # batch facts for the commit summary: events and deletes per bucket
+        # (the lineage), the batch's max _seq (the watermark) and, with
+        # with_stats, the distinct keys per bucket (a key hashes to one
+        # bucket, so the sum is the batch's distinct-key count; a struct
+        # counts null keys like distinct() does)
+        facts = [
+            F.count(F.lit(1)).alias("count"),
+            F.count(F.when(F.col(DELETED), 1)).alias("deletes"),
+            F.max(SEQ).alias("max_seq"),
+        ]
         obs = None
+        lineage = None
         if prune:
-            # 1. bucket pruning + events_in (+ constraint violation counts)
-            #    in ONE job (≤nbuckets result rows)
-            aggs = [F.count(F.lit(1)).alias("count")] + [
+            # 1. bucket pruning + batch facts (+ constraint violation counts)
+            #    in ONE aggregate (≤nbuckets result rows)
+            aggs = facts + [
                 F.sum(F.col(vc).cast("long")).alias(vc) for _, vc in viol_flags
             ]
+            if with_stats:
+                aggs.append(F.count_distinct(F.struct(*keys)).alias("keys"))
             bucket_counts = eval_frame.groupBy("__b").agg(*aggs).collect()
             touched = [r["__b"] for r in bucket_counts]
             events_in = int(sum(r["count"] for r in bucket_counts))
+            lineage = {
+                str(r["__b"]): [r["count"], r["count"] - r["deletes"], r["deletes"]]
+                for r in bucket_counts
+            }
+            seqs = [r["max_seq"] for r in bucket_counts if r["max_seq"] is not None]
+            batch_max_seq = max(seqs, default=None)
             if viol_flags:
                 _raise_violations(
                     {
@@ -3005,8 +3087,6 @@ class SnapshotTable:
                     batch_id,
                 )
         else:
-            from pyspark.sql import Observation
-
             if viol_flags:
                 row = eval_frame.select(
                     *[F.sum(F.col(vc).cast("long")).alias(vc) for _, vc in viol_flags]
@@ -3014,7 +3094,7 @@ class SnapshotTable:
                 _raise_violations({n: row[vc] for n, vc in viol_flags}, batch_id)
             touched = list(range(nbuckets))
             obs = Observation()
-            normalized = normalized.observe(obs, F.count(F.lit(1)).alias("events_in"))
+            normalized = normalized.observe(obs, *facts)
 
         # rescale window (manifest ``legacy``): delta keys may have their
         # stored row in an un-migrated legacy-spec bucket. Those buckets are
@@ -3122,6 +3202,9 @@ class SnapshotTable:
         cluster = _cluster_sort_cols(props, to_write.columns)
         if cluster:
             to_write = to_write.sortWithinPartitions("__b", *cluster)
+        # rows written, counted by the write job itself (no extra job)
+        written_obs = Observation()
+        to_write = to_write.observe(written_obs, F.count(F.lit(1)).alias("rows"))
         writer = to_write.write.partitionBy("__b").mode("overwrite")
         if props.get("max_file_rows"):
             writer = writer.option("maxRecordsPerFile", int(props["max_file_rows"]))
@@ -3138,7 +3221,7 @@ class SnapshotTable:
         new_buckets = dict(m["buckets"])
         dirty = set(m.get("dirty") or [])
         written_files: list[str] = []
-        written = 0
+        files_written = 0
         for b in touched:
             bdir = os.path.join(vdir, f"__b={b}")
             files = (
@@ -3151,7 +3234,7 @@ class SnapshotTable:
                 else []
             )
             written_files.extend(files)
-            written += len(files)
+            files_written += len(files)
             if mor and files:
                 prior = new_buckets.get(str(b), [])
                 new_buckets[str(b)] = prior + files
@@ -3179,7 +3262,7 @@ class SnapshotTable:
                     if f.endswith(".parquet")
                 )
                 written_files.extend(files)
-                written += len(files)
+                files_written += len(files)
                 if files:
                     # migration fan-out: rows from migrated legacy buckets,
                     # whose keys exist in no other file — append, not replace
@@ -3193,8 +3276,10 @@ class SnapshotTable:
                     new_legacy.append({"nbuckets": sp["nbuckets"], "buckets": rest})
             legacy = new_legacy
 
-        if obs is not None:  # prune=False: events_in observed during the write
-            events_in = int(obs.get["events_in"])
+        if obs is not None:  # prune=False: batch facts observed during the write
+            events_in = int(obs.get["count"])
+            batch_max_seq = obs.get["max_seq"]
+        rows_written = int(written_obs.get["rows"])
 
         # per-file column metrics: new files get footer-derived min/max
         # (one executor-side metadata job over the touched buckets' files,
@@ -3250,9 +3335,16 @@ class SnapshotTable:
         # state-idempotence. Manifest size stays FLAT over a long stream.
         ledger_keep = int((m.get("props") or {}).get("ledger_keep", 128))
         committed = {k: v for k, v in committed.items() if v > version - ledger_keep}
-        keys_after = (
-            delta.select(*keys).distinct().count() if (with_stats and events_in) else -1
-        )
+        if not (with_stats and events_in):
+            keys_after = -1
+        elif prune:
+            keys_after = sum(r["keys"] for r in bucket_counts)
+        else:  # an observed metric cannot count distinct values
+            keys_after = delta.select(*keys).distinct().count()
+        watermark = self._seq_watermark(m)
+        if batch_max_seq is not None:
+            watermark = max(watermark, batch_max_seq)
+        wall_ms = int((time.time() - t0) * 1000)
 
         manifest = {
             **m,
@@ -3264,17 +3356,27 @@ class SnapshotTable:
             "file_stats": file_stats,
             "committed_batches": committed,
             "batch_hwm": hwm,
+            "max_seq": watermark,
             "parent": m["version"],
             "committed_ts": time.time(),
             # per-commit summary (Iceberg snapshot-summary analog) — what the
-            # metadata tables (history_df/snapshots_df) surface per version
+            # metadata tables (history_df/snapshots_df) and the batch
+            # metrics/lineage views (cdc.metrics) surface per version. It
+            # lands atomically with the commit, so a committed batch's
+            # telemetry can never be lost. lineage: bucket -> [events_in,
+            # upserts, deletes]; None on the prune=False path.
             "summary": {
                 "operation": operation,
                 "mode": mode,
                 "batch_id": batch_id,
                 "events_in": events_in,
-                "rows_written": written,
+                "keys_upserted": keys_after if keys_after >= 0 else None,
+                "dupes_dropped": events_in - keys_after if keys_after >= 0 else None,
                 "buckets_touched": len(touched),
+                "files_written": files_written,
+                "rows_written": rows_written,
+                "wall_ms": wall_ms,
+                "lineage": lineage,
             },
         }
         # optimistic concurrency: the snapshot this merge was planned against
@@ -3294,8 +3396,9 @@ class SnapshotTable:
             events_in=events_in,
             keys_after_dedup=keys_after,
             buckets_touched=len(touched),
-            rows_written=written,
-            wall_ms=int((time.time() - t0) * 1000),
+            rows_written=rows_written,
+            wall_ms=wall_ms,
             mode=mode,
             buckets_migrated=sum(len(v) for v in legacy_touched.values()),
+            files_written=files_written,
         )

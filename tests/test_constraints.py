@@ -185,3 +185,17 @@ def test_add_constraint_name_and_duplicate_validation(spark, tmp_path):
     t.add_constraint("x_pos", "x > 0")
     with pytest.raises(ValueError, match="already exists"):
         t.add_constraint("x_pos", "x > 1")
+
+
+def test_add_constraint_on_missing_column_refused_without_validation(spark, tmp_path):
+    """validate=False skips the scan, not the resolve check: a constraint
+    naming a column the stored schema lacks must not commit and then fail
+    every later merge."""
+    t = _mk(spark, tmp_path)
+    t.merge(_delta(spark, [(1, 10, "upsert", 1)]), "b1")
+    v = t.current_version()
+    with pytest.raises(ValueError, match="no_such_col"):
+        t.add_constraint("bad", "no_such_col > 0", validate=False)
+    assert t.current_version() == v and t.constraints() == {}
+    t.merge(_delta(spark, [(2, 20, "upsert", 2)]), "b2")
+    assert _state(t) == {1: 10, 2: 20}
