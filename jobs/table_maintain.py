@@ -8,9 +8,10 @@ clustered files — linear stats_cols sort or the z-order key, whichever the
 table declares), then EXPIRE (drop manifests older than --keep-last and
 delete unreferenced data files, including the pre-compaction copies just
 superseded). Both are safe beside concurrent readers (files are immutable,
-commits are atomic pointer swaps) and beside a concurrent writer: compact
-raises ConcurrentWriteError instead of clobbering a mid-flight merge, and
-this job treats that as "skip this cycle" (exit 0, the next cycle retries).
+commits are atomic pointer swaps) and beside a concurrent writer: an op
+that loses a race skips this cycle (exit 0, the next cycle retries); an op
+the table refuses prints ``maintain: <op> failed: <reason>`` on stderr, the
+other ops still run, and the job exits 1.
 Expiry passes ``--orphan-grace`` (default 600 s) through to
 ``expire_snapshots(orphan_grace_s=...)`` so a writer's staged pre-commit
 files — on disk before its manifest commit — are never swept mid-write.
@@ -55,18 +56,24 @@ Usage:
         [--add-constraint NAME EXPR] [--drop-constraint NAME] \
         [--no-compact] [--no-expire] [--orphan-grace 600]
 
-Prints one summary line: buckets compacted, files before/after, manifests
-removed, data files removed, final version.
+Prints one summary line: buckets compacted, files before/after, the ops
+that lost a race (``conflicts=<op,...>``), manifests removed, data files
+removed, final version.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 from pyspark.sql import SparkSession
 
-from pyetl_spark.cdc.tableio import ConcurrentWriteError, SnapshotTable
+from pyetl_spark.cdc.tableio import (
+    ConcurrentWriteError,
+    ConstraintViolationError,
+    SnapshotTable,
+)
 
 
 def main(argv: list[str]) -> int:
@@ -174,93 +181,81 @@ def main(argv: list[str]) -> int:
         "maintenance; exit 1 on issues",
     )
     args = ap.parse_args(argv)
-
     spark = SparkSession.builder.appName("pyetl_spark_table_maintain").getOrCreate()
     table = SnapshotTable(spark, args.table_root)
+
+    bid = args.dml_batch_id
+    both = args.delete_where is not None and args.update_where is not None
+
+    def dml_id(suffix: str) -> str | None:
+        # one ledger id per DML op: with both flags set, suffix so the
+        # second isn't swallowed by the first's ledger entry
+        return f"{bid}:{suffix}" if bid and both else bid
+
+    # (token, op, its summary field) in the fixed run order; flags are
+    # parsed here, so a malformed invocation fails before any op runs
+    ops = []
+    if args.delete_where is not None:
+        where = [tuple(f) for f in json.loads(args.delete_where)]
+        ops.append(("delete", lambda: table.delete_where(where, dml_id("del")),
+                    lambda st: f"deleted={st.events_in}"))
+    if args.update_where is not None:
+        upd = json.loads(args.update_where)
+        upd_where = [tuple(f) for f in upd["where"]]
+        ops.append(("update", lambda: table.update_where(upd["set"], upd_where, dml_id("upd")),
+                    lambda st: f"updated={st.events_in}"))
+    if args.add_column is not None:
+        name, dtype = args.add_column
+        ops.append(("add_column", lambda: table.add_column(name, dtype),
+                    lambda _: f"added_column={name}"))
+    if args.rename is not None:
+        old, new = args.rename
+        ops.append(("rename", lambda: table.rename_column(old, new),
+                    lambda _: f"renamed={old}:{new}"))
+    if args.drop_column is not None:
+        ops.append(("drop_column", lambda: table.drop_column(args.drop_column),
+                    lambda _: f"dropped_column={args.drop_column}"))
+    if args.add_constraint is not None:
+        cname, expr = args.add_constraint
+        ops.append(("add_constraint", lambda: table.add_constraint(cname, expr),
+                    lambda _: f"constraint_added={cname}"))
+    if args.drop_constraint is not None:
+        ops.append(("drop_constraint", lambda: table.drop_constraint(args.drop_constraint),
+                    lambda _: f"constraint_dropped={args.drop_constraint}"))
+    if args.alter is not None:
+        spec = json.loads(args.alter)
+        unset = [k[1:] for k in spec if k.startswith("-")]
+        sets = {k: v for k, v in spec.items() if not k.startswith("-")}
+        # creator-owned props need alter_props(force=True), which this job
+        # never passes
+        owned = sorted((set(sets) | set(unset)) - SnapshotTable._ALTERABLE_PROPS)
+        if owned:
+            raise ValueError(f"--alter: {owned} are creator-owned table props")
+        # the compact below re-lays files out under the new props
+        ops.append(("alter", lambda: table.alter_props(sets, unset=unset), None))
+    if args.rescale is not None:  # lazy: the compact below finishes it
+        ops.append(("rescale", lambda: table.rescale(args.rescale), None))
+    if not args.no_compact:
+        ops.append(("compact", lambda: table.compact(min_files=args.min_files), None))
 
     cloned = ""
     if args.clone is not None:
         t2 = table.clone(args.clone, version=args.clone_version)
         cloned = f"cloned_to={args.clone} cloned_version={t2.current_version()} "
 
-    c = {"compacted_buckets": 0, "files_before": 0, "files_after": 0}
-    skipped = False
-    dml = ""
-    if args.delete_where is not None or args.update_where is not None:
-        import json
-
-        # one ledger id per DML op: with both flags set, suffix so the
-        # second isn't swallowed by the first's ledger entry
-        bid = args.dml_batch_id
-        both = args.delete_where is not None and args.update_where is not None
+    done, fields, conflicts, failed = {}, [], [], []
+    for token, op, field in ops:
         try:
-            if args.delete_where is not None:
-                filters = [tuple(f) for f in json.loads(args.delete_where)]
-                st = table.delete_where(
-                    filters, batch_id=f"{bid}:del" if bid and both else bid
-                )
-                dml += f"deleted={st.events_in} "
-            if args.update_where is not None:
-                spec = json.loads(args.update_where)
-                st = table.update_where(
-                    spec["set"],
-                    [tuple(f) for f in spec["where"]],
-                    batch_id=f"{bid}:upd" if bid and both else bid,
-                )
-                dml += f"updated={st.events_in} "
+            done[token] = res = op()
         except ConcurrentWriteError:
-            skipped = True  # a merge landed mid-sweep; next cycle retries
-    schema_ops = ""
-    if args.add_column is not None:
-        try:
-            table.add_column(args.add_column[0], args.add_column[1])
-            schema_ops += f"added_column={args.add_column[0]} "
-        except ConcurrentWriteError:
-            skipped = True
-    if args.rename is not None:
-        try:
-            table.rename_column(args.rename[0], args.rename[1])
-            schema_ops += f"renamed={args.rename[0]}:{args.rename[1]} "
-        except ConcurrentWriteError:
-            skipped = True
-    if args.drop_column is not None:
-        try:
-            table.drop_column(args.drop_column)
-            schema_ops += f"dropped_column={args.drop_column} "
-        except ConcurrentWriteError:
-            skipped = True
-    if args.add_constraint is not None:
-        try:
-            table.add_constraint(args.add_constraint[0], args.add_constraint[1])
-            schema_ops += f"constraint_added={args.add_constraint[0]} "
-        except ConcurrentWriteError:
-            skipped = True
-    if args.drop_constraint is not None:
-        try:
-            table.drop_constraint(args.drop_constraint)
-            schema_ops += f"constraint_dropped={args.drop_constraint} "
-        except ConcurrentWriteError:
-            skipped = True
-    if args.alter is not None:
-        import json
-
-        spec = json.loads(args.alter)
-        unset = [k[1:] for k in spec if k.startswith("-")]
-        sets = {k: v for k, v in spec.items() if not k.startswith("-")}
-        try:
-            table.alter_props(sets, unset=unset)  # compact below re-lays out
-        except ConcurrentWriteError:
-            skipped = True
-    if args.rescale is not None:
-        try:
-            table.rescale(args.rescale)  # lazy: compact below finishes it
-        except ConcurrentWriteError:
-            skipped = True
-    if not args.no_compact:
-        try:
-            c = table.compact(min_files=args.min_files)
-        except ConcurrentWriteError:
-            skipped = True  # a merge landed mid-rewrite; next cycle retries
+            conflicts.append(token)  # a writer landed mid-op; next cycle retries
+        except (ValueError, ConstraintViolationError) as e:
+            failed.append(token)
+            print(f"maintain: {token} failed: {' '.join(str(e).split())}", file=sys.stderr)
+        else:
+            if field is not None:
+                fields.append(field(res) + " ")
+    c = done.get("compact", {"compacted_buckets": 0, "files_before": 0, "files_after": 0})
 
     e = {"removed_manifests": 0, "removed_files": 0}
     if not args.no_expire:
@@ -269,7 +264,7 @@ def main(argv: list[str]) -> int:
         )
 
     fsck = ""
-    rc = 0
+    rc = 1 if failed else 0
     if args.verify:
         rep = table.verify(all_versions=True)
         fsck = (
@@ -279,12 +274,13 @@ def main(argv: list[str]) -> int:
         )
         for issue in rep["issues"]:
             print(f"fsck: {issue}", file=sys.stderr)
-        rc = 0 if rep["ok"] else 1
+        rc = rc or (0 if rep["ok"] else 1)
     print(
-        cloned + dml + schema_ops + f"compacted_buckets={c['compacted_buckets']} "
+        cloned + "".join(fields) + f"compacted_buckets={c['compacted_buckets']} "
         f"files_before={c['files_before']} files_after={c['files_after']} "
-        f"compact_skipped={str(skipped).lower()} "
-        f"removed_manifests={e['removed_manifests']} "
+        f"compact_skipped={str('compact' in conflicts).lower()} "
+        + (f"conflicts={','.join(conflicts)} " if conflicts else "")
+        + f"removed_manifests={e['removed_manifests']} "
         f"removed_files={e.get('removed_files', 0)} "
         f"freed_names={e.get('freed_names', 0)} "
         f"version={table.current_version()}" + fsck

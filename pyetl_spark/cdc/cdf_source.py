@@ -50,7 +50,6 @@ streaming source over the lake table's own commit log.
 from __future__ import annotations
 
 import json
-import os
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -61,50 +60,15 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from pyetl_spark.cdc import manifest as mf
+
 SEQ = "_seq"
 DELETED = "_deleted"
 
 
-# ------------------------------------------------------------ manifest I/O
-# Plain-JSON manifest reads (driver-side planning only). Deliberately NOT
-# via SnapshotTable: the reader must stay importable and picklable without
-# a SparkSession, and planning needs only the commit log.
-
-
-def _manifest_path(root: str, version: int) -> str:
-    return os.path.join(root, "_versions", f"v{version:08d}.json")
-
-
-def _load_manifest(root: str, version: int) -> dict:
-    with open(_manifest_path(root, version)) as f:
-        return json.load(f)
-
-
-def _current_version(root: str) -> int:
-    with open(os.path.join(root, "_current")) as f:
-        return int(f.read().strip())
-
-
-def _lineage(root: str, from_version: int, to_version: int) -> list[int]:
-    """Parent-chain walk from ``to_version`` back to ``from_version``
-    (mirrors SnapshotTable._lineage — numeric adjacency is wrong across
-    rollbacks)."""
-    chain = [to_version]
-    v = to_version
-    while v != from_version:
-        if not os.path.exists(_manifest_path(root, v)):
-            raise ValueError(
-                f"version {v} not retained (expired) — stream range "
-                f"(v{from_version}, v{to_version}] is unreadable"
-            )
-        parent = _load_manifest(root, v).get("parent")
-        if parent is None:
-            raise ValueError(
-                f"v{from_version} is not an ancestor of v{to_version}"
-            )
-        chain.append(parent)
-        v = parent
-    return list(reversed(chain))
+# The commit log is read through cdc.manifest (plain JSON, no Spark import),
+# the same reader SnapshotTable uses: the source must stay importable and
+# picklable without a SparkSession, and planning needs only the commit log.
 
 
 def _table_feed_schema(root: str, version: int | None = None) -> StructType:
@@ -118,10 +82,10 @@ def _table_feed_schema(root: str, version: int | None = None) -> StructType:
     nearest ancestor WITH one: schema evolution is widening-only, so the
     nearest schema'd ancestor is the widest schema any commit ≤ anchor
     wrote (property-test find)."""
-    m = _load_manifest(root, _current_version(root) if version is None else version)
+    m = mf.load(root, mf.current_version(root) if version is None else version)
     while not m.get("schema") and m.get("parent") is not None:
         try:
-            m = _load_manifest(root, m["parent"])
+            m = mf.load(root, m["parent"])
         except (FileNotFoundError, ValueError):
             break  # expired ancestor: nothing more to learn
     if not m.get("schema"):
@@ -182,7 +146,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
         self.max_commits = int(options.get("maxcommitsperbatch", 64))
         start = str(options.get("startingversion", "current")).lower()
         self.start_version = (
-            _current_version(self.root) if start in ("current", "latest")
+            mf.current_version(self.root) if start in ("current", "latest")
             else int(start)
         )
         self.schema = schema
@@ -199,7 +163,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:
-        cur = _current_version(self.root)
+        cur = mf.current_version(self.root)
         if self._last_end is not None:
             cur = min(cur, self._last_end + self.max_commits)
         return {"version": cur}
@@ -238,12 +202,10 @@ def _plan_partitions(root: str, sv: int, ev: int, pinned: set) -> list[InputPart
     # columns renamed inside the range are mapped through the anchor's
     # alias registry — both for the pinned-schema drift check here and for
     # the executor-side physical-name fold in _resolved_pdf
-    m_ev = _load_manifest(root, ev)
+    m_ev = mf.load(root, ev)
     aliases = dict(m_ev.get("aliases") or {})
     dropped = set(m_ev.get("dropped") or {})
-    prev_m = _load_manifest(root, sv)
-    for v in _lineage(root, sv, ev)[1:]:
-        m = _load_manifest(root, v)
+    for v, prev_m, m, changed in mf.commit_diffs(root, sv, ev):
         if m.get("schema"):
             # columns dropped inside the range leave the feed (changes()
             # parity), renamed ones count under their ending name
@@ -258,9 +220,8 @@ def _plan_partitions(root: str, sv: int, ev: int, pinned: set) -> list[InputPart
                     f"{sorted(new_cols)} after the stream pinned its "
                     "schema — restart the stream to pick them up"
                 )
-        if m["nbuckets"] != prev_m["nbuckets"]:
-            prev_m = m  # rescale commit: metadata-only, no row changes
-            continue
+        if changed is None:
+            continue  # rescale commit: metadata-only, no row changes
         keys = m["keys"]
         # rescale-migration windows: bucket identity is spec-relative
         # and Spark's xxhash64 can't be recomputed off-JVM, but the
@@ -271,26 +232,15 @@ def _plan_partitions(root: str, sv: int, ev: int, pinned: set) -> list[InputPart
         # a row migrating INTO a changed bucket is present where it
         # must be. Exact, at the price of re-reading the legacy set
         # per changed bucket while a migration window is open.
-        a_legacy = [
-            f
-            for sp in prev_m.get("legacy") or []
-            for fs in sp["buckets"].values()
-            for f in fs
-        ]
-        b_legacy = [
-            f
-            for sp in m.get("legacy") or []
-            for fs in sp["buckets"].values()
-            for f in fs
-        ]
-        for b in sorted(set(prev_m["buckets"]) | set(m["buckets"])):
-            a_f = prev_m["buckets"].get(b) or []
-            b_f = m["buckets"].get(b) or []
-            if a_f != b_f and b_f:
+        a_legacy = mf.legacy_files(prev_m)
+        b_legacy = mf.legacy_files(m)
+        for b in changed:
+            b_f = m["buckets"].get(b)
+            if b_f:
                 parts.append(
                     ChangesPartition(
                         v,
-                        a_f + a_legacy,
+                        (prev_m["buckets"].get(b) or []) + a_legacy,
                         b_f + b_legacy,
                         # key names as of the ENDING anchor (a pre-rename
                         # commit's key column folds into its current name)
@@ -298,7 +248,6 @@ def _plan_partitions(root: str, sv: int, ev: int, pinned: set) -> list[InputPart
                         aliases,
                     )
                 )
-        prev_m = m
     # Spark requires >= 1 partition; an all-metadata range (compaction /
     # expiry only) yields one empty unit
     return parts or [ChangesPartition(-1, [], [], [])]
@@ -411,7 +360,7 @@ class TableChangesBatchReader(DataSourceReader):
             raise ValueError("table_changes: option 'path' (table root) is required")
         self.start = int(options.get("startingversion", 0))
         endo = options.get("endingversion")
-        self.end = int(endo) if endo is not None else _current_version(self.root)
+        self.end = int(endo) if endo is not None else mf.current_version(self.root)
         self.schema = schema
         from pyspark.sql.pandas.types import to_arrow_schema
 

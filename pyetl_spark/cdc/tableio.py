@@ -70,6 +70,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from pyetl_spark.cdc import manifest as mf
 from pyetl_spark.cdc.dedup import lww_dedup
 
 SEQ = "_seq"
@@ -535,14 +536,26 @@ def _evolve_schema_json(
     return StructType(out).json()
 
 
-def _write_json(path: str, obj) -> None:
-    """write-fsync-rename: readers see the whole file or none of it."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+def _check_layout_props(props: dict) -> None:
+    """Refuse engine layout props that every later write would trip over:
+    z-order columns need ``[lo, hi]`` bounds and footer stats, and
+    ``merge_mode`` must name a commit strategy ``merge()`` knows."""
+    zcols = props.get("zorder_cols") or []
+    if zcols:
+        zb = props.get("zorder_bounds") or {}
+        missing = [c for c in zcols if c not in zb or len(zb[c]) != 2]
+        if missing:
+            raise ValueError(
+                f"zorder_cols need [lo, hi] zorder_bounds; missing/invalid: {missing}"
+            )
+        unstatted = [c for c in zcols if c not in (props.get("stats_cols") or [])]
+        if unstatted:
+            raise ValueError(
+                "zorder_cols must also be in stats_cols (skipping needs the "
+                f"footer metrics): {unstatted}"
+            )
+    if props.get("merge_mode") not in (None, "cow", "mor"):
+        raise ValueError(f"merge_mode must be cow|mor, got {props['merge_mode']!r}")
 
 
 def _commit_record(m: dict) -> dict:
@@ -605,20 +618,7 @@ class SnapshotTable:
         everything else is immutable unless forced."""
         if bucket_cols is not None and not set(bucket_cols) <= set(keys):
             raise ValueError(f"bucket_cols {bucket_cols} must be a subset of keys {keys}")
-        zcols = (props or {}).get("zorder_cols") or []
-        if zcols:
-            zb = (props or {}).get("zorder_bounds") or {}
-            missing = [c for c in zcols if c not in zb or len(zb[c]) != 2]
-            if missing:
-                raise ValueError(
-                    f"zorder_cols need [lo, hi] zorder_bounds; missing/invalid: {missing}"
-                )
-            unstatted = [c for c in zcols if c not in ((props or {}).get("stats_cols") or [])]
-            if unstatted:
-                raise ValueError(
-                    "zorder_cols must also be in stats_cols (skipping needs the "
-                    f"footer metrics): {unstatted}"
-                )
+        _check_layout_props(props or {})
         os.makedirs(os.path.join(root, "_versions"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         t = cls(spark, root)
@@ -648,44 +648,74 @@ class SnapshotTable:
     # ------------------------------------------------------------- manifests
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.root, "_versions", f"v{version:08d}.json")
+        return mf.version_path(self.root, version)
 
     def _write_manifest(self, manifest: dict) -> None:
-        _write_json(self._manifest_path(manifest["version"]), manifest)
+        mf.write_json(self._manifest_path(manifest["version"]), manifest)
 
     def _commit_manifest(self, manifest: dict) -> None:
         """Atomic commit arbitration (ADVICE r01): exclusively create the
-        version's manifest file (O_EXCL). Two writers racing to the same next
-        version cannot both succeed — the loser raises
+        version's manifest file (put-if-absent). Two writers racing to the
+        same next version cannot both succeed — the loser raises
         :class:`ConcurrentWriteError` and its data files stay unreferenced
         (retry-safe). This closes the check-then-act window a plain
-        ``current_version()`` pre-check leaves open. Crash mid-write leaves a
-        partial manifest that the pointer never references; recovery = delete
-        manifests newer than the pointer."""
-        path = self._manifest_path(manifest["version"])
-        # write fully to a private tmp, fsync, then LINK to the final name:
-        # os.link is atomic AND fails with EEXIST if the version was already
-        # committed — one call gives both torn-write safety (a crash can
-        # never leave a partial manifest at the final path) and the
-        # concurrent-commit arbitration. The tmp name is unique PER ATTEMPT
-        # (uuid, not just pid): two writers in one process (e.g. two
-        # streaming queries merging into the same table) must not share a
-        # tmp file, or the loser's open('w')/unlink could tear or remove the
-        # winner's in-flight content (ADVICE r02).
-        tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
+        ``current_version()`` pre-check leaves open. A crash mid-write never
+        leaves a partial manifest at the final path (see
+        :func:`manifest.create_exclusive`)."""
         try:
-            os.link(tmp, path)
+            mf.create_exclusive(self._manifest_path(manifest["version"]), manifest)
         except FileExistsError:
             raise ConcurrentWriteError(
                 f"version {manifest['version']} already committed by a "
                 "concurrent writer; retry against the new snapshot"
             ) from None
-        finally:
-            os.unlink(tmp)
+
+    def _commit(
+        self, m: dict, summary: dict, version: int | None = None, **changes
+    ) -> int:
+        """The one commit path every table operation takes: the manifest
+        ``m`` the operation was planned against, with ``changes`` applied,
+        becomes the next version (``version``, when the caller had to know
+        it before committing — e.g. for its staging dir), then the pointer
+        swaps to it. Optimistic concurrency: the planned-against snapshot
+        must still be current, and the put-if-absent manifest create
+        arbitrates a race to the same version; on a conflict
+        :class:`ConcurrentWriteError` is raised and nothing is committed
+        (any data files the operation wrote stay unreferenced, so a retry
+        is safe). Returns the committed version."""
+        if version is None:
+            version = self._next_version(m["version"])
+        cur = self.current_version()
+        if cur != m["version"]:
+            raise ConcurrentWriteError(
+                f"table advanced to v{cur} while committing "
+                f"{summary['operation']!r} against v{m['version']}; retry"
+            )
+        self._commit_manifest(
+            {
+                **m,
+                **changes,
+                "version": version,
+                "parent": m["version"],
+                "committed_ts": time.time(),
+                "summary": summary,
+            }
+        )
+        self._swap_pointer(version)
+        return version
+
+    def _staging_dir(self, version: int) -> str:
+        """Where an operation committing ``version`` writes its data files.
+        Unique PER ATTEMPT (not just per version): two writers racing to the
+        same next version must never share a write directory —
+        mode("overwrite") would clobber the other attempt's in-flight files
+        BEFORE _commit_manifest arbitrates the winner. The manifest
+        references absolute file paths, so the suffix is invisible
+        downstream; the loser's files stay unreferenced and are swept by
+        expire_snapshots once older than its orphan grace window (which is
+        also what keeps a concurrent maintainer from sweeping a live
+        attempt's files before _commit_manifest arbitrates)."""
+        return os.path.join(self.root, "data", f"v{version:08d}-{uuid.uuid4().hex[:8]}")
 
     def _pointer_path(self, branch: str | None = None) -> str:
         b = self.branch_name if branch is None else branch
@@ -694,13 +724,7 @@ class SnapshotTable:
         return self._ref_path("branch", b)
 
     def _swap_pointer(self, version: int) -> None:
-        ptr = self._pointer_path()
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, ptr)
+        mf.write_json(self._pointer_path(), version)
 
     def _next_version(self, planned_against: int) -> int:
         """Next commit's version id: one past BOTH the snapshot this write was
@@ -708,18 +732,14 @@ class SnapshotTable:
         rolled-past manifests still exist (retained history), so blindly using
         ``current+1`` would collide with — and under the old os.replace commit,
         silently clobber — a retained snapshot's manifest and data dir. Races
-        on the same number are arbitrated by ``_commit_manifest``'s O_EXCL."""
+        on the same number are arbitrated by ``_commit_manifest``."""
         return max([planned_against, *self._retained_versions()]) + 1
 
     def current_version(self) -> int:
-        with open(self._pointer_path()) as f:
-            return int(f.read().strip())
+        return mf.read_pointer(self._pointer_path())
 
     def manifest(self, version: int | None = None) -> dict:
-        if version is None:
-            version = self.current_version()
-        with open(self._manifest_path(version)) as f:
-            return json.load(f)
+        return mf.load(self.root, self.current_version() if version is None else version)
 
     # ----------------------------------------------------------------- reads
 
@@ -819,8 +839,7 @@ class SnapshotTable:
             items = [(b, fs) for b, fs in items if b in want]
         files = [f for _, fs in items for f in fs]
         cur = self._read_files(files, schema_json=m.get("schema"), aliases=m.get("aliases"), alias_files=m.get("alias_files"))
-        legacy = m.get("legacy") or [] if include_legacy else []
-        lfiles = [f for sp in legacy for fs in sp["buckets"].values() for f in fs]
+        lfiles = mf.legacy_files(m) if include_legacy else []
         if not lfiles:
             return cur
         lg = self._read_files(lfiles, schema_json=m.get("schema"), aliases=m.get("aliases"), alias_files=m.get("alias_files"))
@@ -948,12 +967,7 @@ class SnapshotTable:
         # min/max and bloom pruning apply to them unchanged; they are read
         # separately only so a bucket-pruned scan can row-filter them by
         # the recomputed current-spec bucket id
-        legacy_files = [
-            f
-            for sp in m.get("legacy") or []
-            for fs in sp["buckets"].values()
-            for f in fs
-        ]
+        legacy_files = mf.legacy_files(m)
         kept = [
             f
             for f in clean_files
@@ -1065,11 +1079,7 @@ class SnapshotTable:
     # (moteur/compteurs.py) recast as lake-level inspection.
 
     def _retained_versions(self) -> list[int]:
-        return sorted(
-            int(f[1:-5])
-            for f in os.listdir(os.path.join(self.root, "_versions"))
-            if f.startswith("v") and f.endswith(".json")
-        )
+        return mf.retained_versions(self.root)
 
     def _current_ancestors(self) -> set[int]:
         """Versions on the current pointer's parent chain (a rollback can
@@ -1232,7 +1242,8 @@ class SnapshotTable:
     # versioned schema snapshots (schema_io.py).
 
     def _ref_path(self, kind: str, name: str) -> str:
-        if not re.fullmatch(r"[A-Za-z0-9._-]{1,64}", name):
+        # ".tmp" marks an in-flight pointer write, never a ref (see _refs)
+        if not re.fullmatch(r"[A-Za-z0-9._-]{1,64}", name) or ".tmp" in name:
             raise ValueError(f"bad {kind} name {name!r}")
         return os.path.join(self.root, "_refs", f"{kind}_{name}")
 
@@ -1240,34 +1251,31 @@ class SnapshotTable:
         d = os.path.join(self.root, "_refs")
         if not os.path.isdir(d):
             return {}
-        out = {}
-        for f in sorted(os.listdir(d)):
-            if f.startswith(f"{kind}_") and not f.endswith(".tmp"):
-                with open(os.path.join(d, f)) as fh:
-                    out[f[len(kind) + 1 :]] = int(fh.read().strip())
-        return out
+        return {
+            f[len(kind) + 1 :]: mf.read_pointer(os.path.join(d, f))
+            for f in sorted(os.listdir(d))
+            if f.startswith(f"{kind}_") and ".tmp" not in f
+        }
+
+    def _create_ref(self, kind: str, name: str, version: int) -> None:
+        """Pin ``version`` under a new ref; two concurrent creates of the
+        same name → one winner, the other gets ``ValueError``."""
+        p = self._ref_path(kind, name)
+        if not os.path.exists(self._manifest_path(version)):
+            raise ValueError(f"version {version} not retained (expired or never existed)")
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        try:
+            mf.create_exclusive(p, version)
+        except FileExistsError:
+            raise ValueError(f"{kind} {name!r} already exists") from None
 
     def create_branch(self, name: str, at_version: int | None = None) -> "SnapshotTable":
         """Fork an independently-advancing pointer at ``at_version``
         (default: this handle's head) and return a handle bound to it."""
         if name == "main":
             raise ValueError("'main' is the table itself")
-        p = self._ref_path("branch", name)
-        if os.path.exists(p):
-            raise ValueError(f"branch {name!r} already exists")
         v = self.current_version() if at_version is None else at_version
-        if not os.path.exists(self._manifest_path(v)):
-            raise ValueError(f"version {v} not retained (expired or never existed)")
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = f"{p}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        try:
-            os.link(tmp, p)  # O_EXCL: two concurrent creates → one winner
-        except FileExistsError:
-            raise ValueError(f"branch {name!r} already exists") from None
-        finally:
-            os.unlink(tmp)
+        self._create_ref("branch", name, v)
         return self.branch(name)
 
     def branch(self, name: str) -> "SnapshotTable":
@@ -1290,8 +1298,7 @@ class SnapshotTable:
         rollback this side or re-stage the branch instead. The branch
         head's manifest carries its batch ledger with it, so events
         committed on the branch stay exactly-once after publish."""
-        with open(self._ref_path("branch", name)) as f:
-            head = int(f.read().strip())
+        head = mf.read_pointer(self._ref_path("branch", name))
         cur = self.current_version()
         if cur != head:
             self._lineage(cur, head)  # raises unless cur is an ancestor
@@ -1302,28 +1309,15 @@ class SnapshotTable:
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Immutable named version (Iceberg tag): survives snapshot expiry
         and resolves for time-travel reads via :meth:`tag_version`."""
-        p = self._ref_path("tag", name)
         v = self.current_version() if version is None else version
-        if not os.path.exists(self._manifest_path(v)):
-            raise ValueError(f"version {v} not retained (expired or never existed)")
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = f"{p}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        try:
-            os.link(tmp, p)
-        except FileExistsError:
-            raise ValueError(f"tag {name!r} already exists") from None
-        finally:
-            os.unlink(tmp)
+        self._create_ref("tag", name, v)
         return v
 
     def tags(self) -> dict[str, int]:
         return self._refs("tag")
 
     def tag_version(self, name: str) -> int:
-        with open(self._ref_path("tag", name)) as f:
-            return int(f.read().strip())
+        return mf.read_pointer(self._ref_path("tag", name))
 
     def drop_tag(self, name: str) -> None:
         os.unlink(self._ref_path("tag", name))
@@ -1667,43 +1661,12 @@ class SnapshotTable:
         props.update(set_props)
         for k in unset:
             props.pop(k, None)
-        zcols = props.get("zorder_cols") or []
-        if zcols:
-            zb = props.get("zorder_bounds") or {}
-            missing = [c for c in zcols if c not in zb or len(zb[c]) != 2]
-            if missing:
-                raise ValueError(
-                    f"zorder_cols need [lo, hi] zorder_bounds; missing/invalid: {missing}"
-                )
-            unstatted = [c for c in zcols if c not in (props.get("stats_cols") or [])]
-            if unstatted:
-                raise ValueError(
-                    "zorder_cols must also be in stats_cols (skipping needs "
-                    f"the footer metrics): {unstatted}"
-                )
-        if props.get("merge_mode") not in (None, "cow", "mor"):
-            raise ValueError(f"merge_mode must be cow|mor, got {props['merge_mode']!r}")
-        version = self._next_version(m["version"])
-        manifest = {
-            **m,
-            "version": version,
-            "props": props,
-            "parent": m["version"],
-            "committed_ts": time.time(),
-            "summary": {
-                "operation": "alter",
-                "set": sorted(set_props),
-                "unset": sorted(unset),
-            },
-        }
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError(
-                f"table advanced to v{self.current_version()} while altering "
-                f"against v{m['version']}; retry"
-            )
-        self._commit_manifest(manifest)
-        self._swap_pointer(version)
-        return version
+        _check_layout_props(props)
+        return self._commit(
+            m,
+            {"operation": "alter", "set": sorted(set_props), "unset": sorted(unset)},
+            props=props,
+        )
 
     def constraints(self) -> dict:
         """Current CHECK constraints, ``{name: sql_expr}``."""
@@ -1757,23 +1720,11 @@ class SnapshotTable:
                     f"cannot add constraint {name!r}: {bad} existing rows "
                     f"violate CHECK ({expr}); nothing was committed"
                 )
-        version = self._next_version(m["version"])
-        manifest = {
-            **m,
-            "version": version,
-            "constraints": {**cons, name: expr},
-            "parent": m["version"],
-            "committed_ts": time.time(),
-            "summary": {"operation": "add-constraint", "name": name},
-        }
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError(
-                f"table advanced to v{self.current_version()} while adding a "
-                f"constraint against v{m['version']}; retry"
-            )
-        self._commit_manifest(manifest)
-        self._swap_pointer(version)
-        return version
+        return self._commit(
+            m,
+            {"operation": "add-constraint", "name": name},
+            constraints={**cons, name: expr},
+        )
 
     def drop_constraint(self, name: str) -> int:
         """Remove a CHECK constraint (Delta ``DROP CONSTRAINT`` analog) —
@@ -1785,23 +1736,9 @@ class SnapshotTable:
                 f"no constraint {name!r}; have {sorted(cons) or 'none'}"
             )
         del cons[name]
-        version = self._next_version(m["version"])
-        manifest = {
-            **m,
-            "version": version,
-            "constraints": cons,
-            "parent": m["version"],
-            "committed_ts": time.time(),
-            "summary": {"operation": "drop-constraint", "name": name},
-        }
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError(
-                f"table advanced to v{self.current_version()} while dropping "
-                f"a constraint against v{m['version']}; retry"
-            )
-        self._commit_manifest(manifest)
-        self._swap_pointer(version)
-        return version
+        return self._commit(
+            m, {"operation": "drop-constraint", "name": name}, constraints=cons
+        )
 
     def cherry_pick(self, version: int, batch_id: str | None = None) -> MergeStats:
         """Re-apply ONE commit's row-level changes onto the CURRENT head —
@@ -1851,14 +1788,7 @@ class SnapshotTable:
     def _live_file_ids(self, m: dict) -> list[str]:
         """Root-relative identities of every data file the manifest
         references (current buckets + un-migrated rescale legacy)."""
-        ids = [_file_identity(f) for fs in m["buckets"].values() for f in fs]
-        ids += [
-            _file_identity(f)
-            for sp in m.get("legacy") or []
-            for fs in sp["buckets"].values()
-            for f in fs
-        ]
-        return sorted(set(ids))
+        return sorted({_file_identity(f) for f in mf.referenced_files(m)})
 
     def _check_constraints_resolve(self, m: dict, candidate_schema, action: str) -> None:
         """Refuse a schema change, or a new constraint, that would leave a
@@ -1888,13 +1818,10 @@ class SnapshotTable:
         resolve columns BY NAME, so reusing a name inside the retention
         window would be ambiguous (the problem Iceberg field ids solve)."""
         names: set[str] = set()
-        vdir = os.path.join(self.root, "_versions")
-        for f in os.listdir(vdir):
-            if not (f.startswith("v") and f.endswith(".json")):
-                continue
+        for v in self._retained_versions():
             try:
-                rm = self.manifest(int(f[1:-5]))
-            except (OSError, ValueError):
+                rm = self.manifest(v)
+            except (OSError, ValueError):  # expired under us / torn read
                 continue
             if rm.get("schema"):
                 names |= {fl["name"] for fl in json.loads(rm["schema"])["fields"]}
@@ -1939,23 +1866,11 @@ class SnapshotTable:
         fields = [f for f in stored.fields if f.name not in (SEQ, DELETED)]
         tail = [f for f in stored.fields if f.name in (SEQ, DELETED)]
         cand = StructType([*fields, StructField(name, dt, True), *tail])
-        version = self._next_version(m["version"])
-        manifest = {
-            **m,
-            "version": version,
-            "schema": cand.json(),
-            "parent": m["version"],
-            "committed_ts": time.time(),
-            "summary": {"operation": "add-column", "name": name, "type": dtype},
-        }
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError(
-                f"table advanced to v{self.current_version()} while adding "
-                f"a column against v{m['version']}; retry"
-            )
-        self._commit_manifest(manifest)
-        self._swap_pointer(version)
-        return version
+        return self._commit(
+            m,
+            {"operation": "add-column", "name": name, "type": dtype},
+            schema=cand.json(),
+        )
 
     def rename_column(self, old: str, new: str) -> int:
         """Rename a column — the Iceberg ``ALTER TABLE ... RENAME COLUMN``
@@ -2029,30 +1944,16 @@ class SnapshotTable:
             zb = dict(zb)
             zb[new] = zb.pop(old)
             props["zorder_bounds"] = zb
-        version = self._next_version(m["version"])
-        manifest = {
-            **m,
-            "version": version,
-            "schema": cand.json(),
-            "keys": [new if k == old else k for k in m["keys"]],
-            "bucket_cols": [
-                new if k == old else k for k in m.get("bucket_cols", m["keys"])
-            ],
-            "props": props,
-            "aliases": aliases,
-            "alias_files": alias_files,
-            "parent": m["version"],
-            "committed_ts": time.time(),
-            "summary": {"operation": "rename-column", "from": old, "to": new},
-        }
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError(
-                f"table advanced to v{self.current_version()} while renaming "
-                f"against v{m['version']}; retry"
-            )
-        self._commit_manifest(manifest)
-        self._swap_pointer(version)
-        return version
+        return self._commit(
+            m,
+            {"operation": "rename-column", "from": old, "to": new},
+            schema=cand.json(),
+            keys=[new if k == old else k for k in m["keys"]],
+            bucket_cols=[new if k == old else k for k in m.get("bucket_cols", m["keys"])],
+            props=props,
+            aliases=aliases,
+            alias_files=alias_files,
+        )
 
     def drop_column(self, name: str) -> int:
         """Drop a payload column — the Iceberg ``ALTER TABLE ... DROP
@@ -2108,25 +2009,15 @@ class SnapshotTable:
             dropped[a] = {"files": alias_files.pop(a, live), "since": version}
             del aliases[a]
         dropped[name] = {"files": live, "since": version}
-        manifest = {
-            **m,
-            "version": version,
-            "schema": cand.json(),
-            "aliases": aliases,
-            "alias_files": alias_files,
-            "dropped": dropped,
-            "parent": m["version"],
-            "committed_ts": time.time(),
-            "summary": {"operation": "drop-column", "name": name},
-        }
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError(
-                f"table advanced to v{self.current_version()} while dropping "
-                f"a column against v{m['version']}; retry"
-            )
-        self._commit_manifest(manifest)
-        self._swap_pointer(version)
-        return version
+        return self._commit(
+            m,
+            {"operation": "drop-column", "name": name},
+            version,
+            schema=cand.json(),
+            aliases=aliases,
+            alias_files=alias_files,
+            dropped=dropped,
+        )
 
     def verify(self, all_versions: bool = False) -> dict:
         """Metadata fsck — check the table's invariants without reading a
@@ -2161,14 +2052,11 @@ class SnapshotTable:
                     issues.append(f"{kind} {name!r} pins v{v}, not retained")
 
         check = sorted(retained) if all_versions else [cur]
-        referenced: set[tuple[str, str, str]] = set()
-        for v in sorted(retained):
-            mv = self.manifest(v)
-            for fs in mv["buckets"].values():
-                referenced.update(_file_identity(f) for f in fs)
-            for sp in mv.get("legacy") or []:
-                for fs in sp["buckets"].values():
-                    referenced.update(_file_identity(f) for f in fs)
+        referenced = {
+            _file_identity(f)
+            for v in sorted(retained)
+            for f in mf.referenced_files(self.manifest(v))
+        }
 
         for v in check:
             if v not in retained:
@@ -2181,22 +2069,16 @@ class SnapshotTable:
                     StructType.fromJson(json.loads(m["schema"]))
                 except Exception as e:  # noqa: BLE001
                     issues.append(f"v{v}: schema JSON unparseable ({e})")
-            live = set()
-            for b, fs in m["buckets"].items():
+            for b in m["buckets"]:
                 if not str(b).lstrip("-").isdigit() or not (
                     0 <= int(b) < m["nbuckets"]
                 ):
                     issues.append(f"v{v}: bucket key {b!r} outside spec")
-                for f in fs:
-                    live.add(_file_identity(f))
-                    if not os.path.exists(f):
-                        issues.append(f"v{v}: missing data file {f}")
-            for sp in m.get("legacy") or []:
-                for fs in sp["buckets"].values():
-                    for f in fs:
-                        live.add(_file_identity(f))
-                        if not os.path.exists(f):
-                            issues.append(f"v{v}: missing legacy file {f}")
+            live = set()
+            for f in mf.referenced_files(m):
+                live.add(_file_identity(f))
+                if not os.path.exists(f):
+                    issues.append(f"v{v}: missing data file {f}")
             for fid in m.get("file_stats") or {}:
                 if fid not in live:
                     issues.append(f"v{v}: file_stats entry for dead file {fid}")
@@ -2207,22 +2089,9 @@ class SnapshotTable:
                 if bv > m["version"]:
                     issues.append(f"v{v}: ledger {bid!r} claims future v{bv}")
 
-        orphans = 0
-        data_root = os.path.join(self.root, "data")
-        if os.path.isdir(data_root):
-            for vdir in os.listdir(data_root):
-                vfull = os.path.join(data_root, vdir)
-                if not os.path.isdir(vfull):
-                    continue
-                for bdir in os.listdir(vfull):
-                    bfull = os.path.join(vfull, bdir)
-                    if not os.path.isdir(bfull):
-                        continue
-                    for f in os.listdir(bfull):
-                        if f.endswith(".parquet") and _file_identity(
-                            os.path.join(bfull, f)
-                        ) not in referenced:
-                            orphans += 1
+        orphans = sum(
+            _file_identity(f) not in referenced for f in mf.data_files(self.root)
+        )
         return {
             "ok": not issues,
             "issues": issues,
@@ -2266,23 +2135,14 @@ class SnapshotTable:
         # writer spelled self.root, and a reader opening the table through a
         # different spelling (relative cwd, symlinked root like /dev/shm)
         # must not see every referenced file "missing" and delete live data.
-        def _file_id(p: str) -> tuple[str, str, str]:
-            parts = os.path.normpath(p).split(os.sep)
-            return tuple(parts[-3:])
-
-        referenced: set[tuple[str, str, str]] = set()
-        ever_referenced: set[tuple[str, str, str]] = set()
+        referenced: set[str] = set()
+        ever_referenced: set[str] = set()
         expired: list[dict] = []
         for v in versions:
             mv = self.manifest(v)
             if v not in keep:
                 expired.append(_commit_record(mv))
-            ids: set[tuple[str, str, str]] = set()
-            for files in mv["buckets"].values():
-                ids.update(_file_id(f) for f in files)
-            for sp in mv.get("legacy") or []:  # un-migrated rescale files
-                for files in sp["buckets"].values():
-                    ids.update(_file_id(f) for f in files)
+            ids = {_file_identity(f) for f in mf.referenced_files(mv)}
             ever_referenced |= ids
             if v in keep:
                 referenced |= ids
@@ -2290,34 +2150,25 @@ class SnapshotTable:
         removed_files = 0
         skipped_orphans = 0
         grace_cutoff = time.time() - max(orphan_grace_s, 0.0)
-        data_root = os.path.join(self.root, "data")
-        for vdir in sorted(os.listdir(data_root)):
-            for bdir in os.listdir(os.path.join(data_root, vdir)):
-                full_b = os.path.join(data_root, vdir, bdir)
-                if not os.path.isdir(full_b):
+        for full in mf.data_files(self.root):
+            fid = _file_identity(full)
+            if fid in referenced:
+                continue
+            if fid not in ever_referenced:
+                # never committed: possibly an in-flight writer's staged
+                # files — reclaim only past the grace window
+                try:
+                    young = os.path.getmtime(full) >= grace_cutoff
+                except OSError:
+                    continue  # vanished under us (racing maintainer)
+                if young:
+                    skipped_orphans += 1
                     continue
-                for f in os.listdir(full_b):
-                    full = os.path.join(full_b, f)
-                    if not f.endswith(".parquet"):
-                        continue
-                    fid = _file_id(full)
-                    if fid in referenced:
-                        continue
-                    if fid not in ever_referenced:
-                        # never committed: possibly an in-flight writer's
-                        # staged files — reclaim only past the grace window
-                        try:
-                            young = os.path.getmtime(full) >= grace_cutoff
-                        except OSError:
-                            continue  # vanished under us (racing maintainer)
-                        if young:
-                            skipped_orphans += 1
-                            continue
-                    os.remove(full)
-                    # bloom sidecars are GC'd with their data file
-                    if os.path.exists(full + BLOOM_SUFFIX):
-                        os.remove(full + BLOOM_SUFFIX)
-                    removed_files += 1
+            os.remove(full)
+            # bloom sidecars are GC'd with their data file
+            if os.path.exists(full + BLOOM_SUFFIX):
+                os.remove(full + BLOOM_SUFFIX)
+            removed_files += 1
 
         # the expired commits' summaries (batch metrics + lineage) move to
         # an append-only archive BEFORE their manifests go, so expiry never
@@ -2326,7 +2177,7 @@ class SnapshotTable:
             adir = os.path.join(self.root, "_summary_archive")
             os.makedirs(adir, exist_ok=True)
             name = f"v{expired[0]['version']:08d}-v{expired[-1]['version']:08d}-{uuid.uuid4().hex[:8]}.json"
-            _write_json(os.path.join(adir, name), expired)
+            mf.write_json(os.path.join(adir, name), expired)
         removed_manifests = 0
         for v in versions:
             if v not in keep:
@@ -2376,28 +2227,17 @@ class SnapshotTable:
                 elif still != sorted(dropped[nm].get("files", [])):
                     dropped[nm]["files"] = still
                     changed = True
-            if changed and self.current_version() == current:
-                version = self._next_version(current)
+            if changed:
                 try:
-                    self._commit_manifest(
-                        {
-                            **m_cur,
-                            "version": version,
-                            "aliases": ali,
-                            "alias_files": alias_files,
-                            "dropped": dropped,
-                            "parent": current,
-                            "committed_ts": time.time(),
-                            "summary": {
-                                "operation": "prune-names",
-                                "freed": pruned_names,
-                            },
-                        }
+                    self._commit(
+                        m_cur,
+                        {"operation": "prune-names", "freed": pruned_names},
+                        aliases=ali,
+                        alias_files=alias_files,
+                        dropped=dropped,
                     )
                 except ConcurrentWriteError:
                     pruned_names = 0  # lost to a live writer; next expiry
-                else:
-                    self._swap_pointer(version)
         return {
             "kept_versions": sorted(keep),
             "removed_manifests": removed_manifests,
@@ -2429,25 +2269,12 @@ class SnapshotTable:
         # buckets are read and rewritten under the current spec (their rows
         # fan out to the current buckets they hash into), closing the window
         legacy = m.get("legacy") or []
-        legacy_files = [
-            f for sp in legacy for fs in sp["buckets"].values() for f in fs
-        ]
+        legacy_files = mf.legacy_files(m)
         if not frag and not legacy_files:
             return {"compacted_buckets": 0, "files_before": 0, "files_after": 0}
 
         version = self._next_version(m["version"])
-        # staging dir is unique PER ATTEMPT (not just per version): two
-        # writers racing to the same next version must never share a write
-        # directory — mode("overwrite") would clobber the other attempt's
-        # in-flight files BEFORE _commit_manifest arbitrates the winner.
-        # The manifest references absolute file paths, so the suffix is
-        # invisible downstream; the loser's files stay unreferenced and are
-        # swept by expire_snapshots once older than its orphan grace window
-        # (which is also what keeps a concurrent maintainer from sweeping
-        # a live attempt's files before _commit_manifest arbitrates).
-        vdir = os.path.join(
-            self.root, "data", f"v{version:08d}-{uuid.uuid4().hex[:8]}"
-        )
+        vdir = self._staging_dir(version)
         props = m.get("props") or {}
         stats_cols = props.get("stats_cols") or []
         bcols = m.get("bucket_cols", m["keys"])
@@ -2544,28 +2371,17 @@ class SnapshotTable:
                 int(props.get("bloom_hashes", 7)),
             )
 
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError("table advanced during compaction; retry")
-        self._commit_manifest(
-            {
-                **m,
-                "version": version,
-                "buckets": new_buckets,
-                "dirty": sorted(dirty - set(frag)),
-                "legacy": legacy,
-                "file_stats": file_stats,
-                "parent": m["version"],
-                "committed_ts": time.time(),
-                "summary": {
-                    "operation": "compact",
-                    "compacted_buckets": len(frag),
-                    "files_before": before,
-                    "files_after": after,
-                },
-            }
+        res = {"compacted_buckets": len(frag), "files_before": before, "files_after": after}
+        self._commit(
+            m,
+            {"operation": "compact", **res},
+            version,
+            buckets=new_buckets,
+            dirty=sorted(dirty - set(frag)),
+            legacy=legacy,
+            file_stats=file_stats,
         )
-        self._swap_pointer(version)
-        return {"compacted_buckets": len(frag), "files_before": before, "files_after": after}
+        return res
 
     def merge_retry(
         self, delta: DataFrame, batch_id: str | None = None, retries: int = 5, **kw
@@ -2645,26 +2461,14 @@ class SnapshotTable:
         legacy = list(m.get("legacy") or [])
         if m["buckets"]:
             legacy.append({"nbuckets": m["nbuckets"], "buckets": m["buckets"]})
-        version = self._next_version(m["version"])
-        manifest = {
-            **m,
-            "version": version,
-            "nbuckets": nbuckets,
-            "buckets": {},
-            "dirty": [],
-            "legacy": legacy,
-            "parent": m["version"],
-            "committed_ts": time.time(),
-            "summary": {
-                "operation": "rescale",
-                "nbuckets": nbuckets,
-                "legacy_specs": len(legacy),
-            },
-        }
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError("table advanced during rescale; retry")
-        self._commit_manifest(manifest)
-        self._swap_pointer(version)
+        version = self._commit(
+            m,
+            {"operation": "rescale", "nbuckets": nbuckets, "legacy_specs": len(legacy)},
+            nbuckets=nbuckets,
+            buckets={},
+            dirty=[],
+            legacy=legacy,
+        )
         if migrate == "now":
             self.compact(min_files=1 << 30)  # migrates all legacy buckets
         return version
@@ -2758,32 +2562,9 @@ class SnapshotTable:
     # ------------------------------------------------------------ change feed
 
     def _lineage(self, from_version: int, to_version: int) -> list[int]:
-        """Commit lineage ``from_version → … → to_version`` by walking the
-        manifest ``parent`` chain (NOT numeric adjacency: after a rollback
-        the next merge's parent is the rollback target, so v2 may not be
-        v3's ancestor). Raises if ``from_version`` is not an ancestor of
-        ``to_version`` or an intermediate manifest was expired."""
-        if not os.path.exists(self._manifest_path(from_version)):
-            raise ValueError(
-                f"version {from_version} not retained (expired or never existed)"
-            )
-        chain = [to_version]
-        v = to_version
-        while v != from_version:
-            if not os.path.exists(self._manifest_path(v)):
-                raise ValueError(
-                    f"version {v} not retained (expired) — change feed "
-                    f"from v{from_version} to v{to_version} is unreadable"
-                )
-            parent = self.manifest(v).get("parent")
-            if parent is None:
-                raise ValueError(
-                    f"v{from_version} is not an ancestor of v{to_version} "
-                    "(diverged lineage, e.g. across a rollback)"
-                )
-            chain.append(parent)
-            v = parent
-        return list(reversed(chain))
+        """Commit lineage ``from_version → … → to_version`` (see
+        :func:`manifest.lineage`)."""
+        return mf.lineage(self.root, from_version, to_version)
 
     def changes(
         self,
@@ -2860,25 +2641,10 @@ class SnapshotTable:
             pay = [c for c in raw.columns if c not in (*keys, SEQ, DELETED)]
             return raw, pay
 
-        lineage = self._lineage(from_version, to_version)
         out: DataFrame | None = None
         branches = 0
-        prev_m = self.manifest(from_version)
-        for v in lineage[1:]:
-            m = self.manifest(v)
-            if m["nbuckets"] != prev_m["nbuckets"]:
-                # rescale commit: metadata-only by construction (the bucket
-                # map moves to `legacy`, no row changes) — and its bucket
-                # ids are in a different spec, so a map diff is meaningless
-                prev_m = m
-                continue
-            changed = sorted(
-                b
-                for b in set(prev_m["buckets"]) | set(m["buckets"])
-                if prev_m["buckets"].get(b) != m["buckets"].get(b)
-            )
-            prev_m = m
-            if not changed:
+        for v, _, m, changed in mf.commit_diffs(self.root, from_version, to_version):
+            if not changed:  # metadata-only commit, or a rescale (None)
                 continue
             a = _state(m["parent"], changed)
             b = _state(v, changed)
@@ -3182,18 +2948,7 @@ class SnapshotTable:
         #    inserted) and cap file size so footer min/max ranges stay
         #    narrow — that's what makes scan()'s file skipping effective.
         version = self._next_version(m["version"])
-        # staging dir is unique PER ATTEMPT (not just per version): two
-        # writers racing to the same next version must never share a write
-        # directory — mode("overwrite") would clobber the other attempt's
-        # in-flight files BEFORE _commit_manifest arbitrates the winner.
-        # The manifest references absolute file paths, so the suffix is
-        # invisible downstream; the loser's files stay unreferenced and are
-        # swept by expire_snapshots once older than its orphan grace window
-        # (which is also what keeps a concurrent maintainer from sweeping
-        # a live attempt's files before _commit_manifest arbitrates).
-        vdir = os.path.join(
-            self.root, "data", f"v{version:08d}-{uuid.uuid4().hex[:8]}"
-        )
+        vdir = self._staging_dir(version)
         props = m.get("props") or {}
         stats_cols = [c for c in props.get("stats_cols") or []]
         to_write = merged.withColumn("__b", _bucket_col(bcols, nbuckets)).repartition(
@@ -3289,11 +3044,9 @@ class SnapshotTable:
         file_stats = dict(m.get("file_stats") or {})
         if stats_cols or props.get("track_counts"):
             file_stats.update(_collect_file_stats(self.spark, written_files, stats_cols))
-        live = {_file_identity(f) for fs in new_buckets.values() for f in fs} | {
+        live = {
             _file_identity(f)
-            for sp in legacy
-            for fs in sp["buckets"].values()
-            for f in fs
+            for f in mf.referenced_files({"buckets": new_buckets, "legacy": legacy})
         }
         file_stats = {k: v for k, v in file_stats.items() if k in live}
         bloom_cols = [c for c in props.get("bloom_cols") or []]
@@ -3346,49 +3099,38 @@ class SnapshotTable:
             watermark = max(watermark, batch_max_seq)
         wall_ms = int((time.time() - t0) * 1000)
 
-        manifest = {
-            **m,
-            "version": version,
-            "schema": schema_json,
-            "buckets": new_buckets,
-            "dirty": sorted(dirty),
-            "legacy": legacy,
-            "file_stats": file_stats,
-            "committed_batches": committed,
-            "batch_hwm": hwm,
-            "max_seq": watermark,
-            "parent": m["version"],
-            "committed_ts": time.time(),
-            # per-commit summary (Iceberg snapshot-summary analog) — what the
-            # metadata tables (history_df/snapshots_df) and the batch
-            # metrics/lineage views (cdc.metrics) surface per version. It
-            # lands atomically with the commit, so a committed batch's
-            # telemetry can never be lost. lineage: bucket -> [events_in,
-            # upserts, deletes]; None on the prune=False path.
-            "summary": {
-                "operation": operation,
-                "mode": mode,
-                "batch_id": batch_id,
-                "events_in": events_in,
-                "keys_upserted": keys_after if keys_after >= 0 else None,
-                "dupes_dropped": events_in - keys_after if keys_after >= 0 else None,
-                "buckets_touched": len(touched),
-                "files_written": files_written,
-                "rows_written": rows_written,
-                "wall_ms": wall_ms,
-                "lineage": lineage,
-            },
+        # per-commit summary (Iceberg snapshot-summary analog) — what the
+        # metadata tables (history_df/snapshots_df) and the batch
+        # metrics/lineage views (cdc.metrics) surface per version. It lands
+        # atomically with the commit, so a committed batch's telemetry can
+        # never be lost. lineage: bucket -> [events_in, upserts, deletes];
+        # None on the prune=False path.
+        summary = {
+            "operation": operation,
+            "mode": mode,
+            "batch_id": batch_id,
+            "events_in": events_in,
+            "keys_upserted": keys_after if keys_after >= 0 else None,
+            "dupes_dropped": events_in - keys_after if keys_after >= 0 else None,
+            "buckets_touched": len(touched),
+            "files_written": files_written,
+            "rows_written": rows_written,
+            "wall_ms": wall_ms,
+            "lineage": lineage,
         }
-        # optimistic concurrency: the snapshot this merge was planned against
-        # must still be current at commit time (single-writer contract; on a
-        # conflict the new version's files are unreferenced → retry-safe)
-        if self.current_version() != m["version"]:
-            raise ConcurrentWriteError(
-                f"table advanced to v{self.current_version()} while merging "
-                f"against v{m['version']}; retry the merge"
-            )
-        self._commit_manifest(manifest)
-        self._swap_pointer(version)
+        self._commit(
+            m,
+            summary,
+            version,
+            schema=schema_json,
+            buckets=new_buckets,
+            dirty=sorted(dirty),
+            legacy=legacy,
+            file_stats=file_stats,
+            committed_batches=committed,
+            batch_hwm=hwm,
+            max_seq=watermark,
+        )
 
         return MergeStats(
             batch_id=batch_id,

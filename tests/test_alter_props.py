@@ -108,6 +108,15 @@ def test_zorder_invariants_validated_on_result(spark, tmp_path):
         t.alter_props({"merge_mode": "nope"})
 
 
+def test_create_refuses_what_alter_refuses(spark, tmp_path):
+    """create() validates layout props with the same rules as alter_props:
+    a bad merge_mode would otherwise commit and fail every later merge."""
+    for props in ({"merge_mode": "bogus"}, {"zorder_cols": ["x"]}):
+        with pytest.raises(ValueError, match="merge_mode|zorder_bounds"):
+            _mk(spark, tmp_path, **props)
+        assert not SnapshotTable.exists(str(tmp_path / "t"))
+
+
 def test_alter_is_silent_in_cdf_and_props_are_versioned(spark, tmp_path):
     """The alter commit emits no change rows, history records the op, and
     time travel sees each version's own props."""

@@ -269,3 +269,25 @@ def test_maintain_add_column_flag(spark, job, tmp_path, capsys):
     t = SnapshotTable(spark, root)
     assert "score" in t.read().columns
     assert dict(t.read().dtypes)["score"] == "double"
+
+
+def test_maintain_refused_op_still_compacts_and_expires(spark, job, tmp_path, capsys):
+    """A schema op the table refuses (rename onto an existing column) is
+    reported on one stderr line and fails the run (rc 1), but compact,
+    expire and verify still run; it is a refusal, not a compact conflict."""
+    root = str(tmp_path / "t")
+    t = _mk_table(spark, root)
+    before_state = sorted(tuple(r) for r in t.read().collect())
+    before_files = _data_file_count(root)
+    rc = job.main([root, "--rename", "v", "id", "--min-files", "1",
+                   "--keep-last", "1", "--verify"])
+    assert rc == 1
+    out, err = capsys.readouterr()
+    assert err.splitlines()[0].startswith("maintain: rename failed: cannot rename to 'id'")
+    assert "compact_skipped=false" in out and "conflicts=" not in out
+    assert "renamed=" not in out and "fsck_ok=true" in out
+    assert "compacted_buckets=0" not in out and "removed_manifests=0" not in out
+    t2 = SnapshotTable(spark, root)
+    assert t2.manifest()["summary"]["operation"] == "compact"
+    assert sorted(tuple(r) for r in t2.read().collect()) == before_state
+    assert _data_file_count(root) < before_files

@@ -120,6 +120,23 @@ def test_branch_head_survives_expiry_from_main(spark, table):
     assert rows(audit.read(), "k", "val") == [("a", 10), ("b", 2), ("c", 3)]
 
 
+def test_in_flight_ref_tmp_is_not_a_ref(spark, table):
+    """A ref create stages its pointer in a tmp file before linking it into
+    place; a stray one (a crashed or in-flight create) is neither listed as
+    a branch nor pins a version against expiry — even half-written."""
+    table.create_branch("x")
+    table.merge(_ev(spark, STAGE1), batch_id="s1")
+    table.merge(_ev(spark, STAGE2), batch_id="s2")
+    stray = os.path.join(table.root, "_refs", "branch_x.tmp.0123456789abcdef")
+    open(stray, "w").close()  # half-written: empty
+    assert table.branches() == {"x": 1}
+    res = table.expire_snapshots(keep_last=1)
+    assert res["kept_versions"] == [1, 3]
+    assert [r["name"] for r in table.refs_df().collect()] == ["main", "x"]
+    with pytest.raises(ValueError, match="bad branch name"):
+        table.create_branch("y.tmp")
+
+
 def test_ref_name_hygiene_and_duplicates(spark, table):
     with pytest.raises(ValueError, match="bad branch name"):
         table.create_branch("../evil")
