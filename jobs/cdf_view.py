@@ -27,11 +27,21 @@ historical commits recomputes against the state each slice actually saw,
 not today's.
 
 Scale notes: per consumed commit, the feed reads only the buckets named by
-the manifest diff (changes() docstring) and the view reads only the state
-buckets the slice's groups hash into — a quiet base table costs nothing,
-a busy one costs ∝ its changed data. Expired intermediate manifests fail
+the manifest diff (changes() docstring) and the view reads and rewrites
+only the state buckets the slice's groups hash into — a quiet base table
+costs nothing, a busy one costs ∝ its changed data. A COUNT/SUM view's
+apply is two Spark job chains: the feed diff + delta aggregate, pinned
+(it also yields the touched view buckets), and one write of the folded
+buckets (SnapshotTable.replace_buckets); about 6 jobs per commit on
+local[4]. consume() never scans the whole view: the ``groups`` count is
+printed once, by main(), at exit. Expired intermediate manifests fail
 loudly (ValueError) rather than silently skipping commits: re-create the
 view or widen the base table's snapshot retention.
+
+Summary line (stdout, JSON): ``base_version`` (the base table version
+caught up to), ``applied_now`` (base commits applied by this run, oldest
+first), ``view_version`` (the view's ledger table version after the run)
+and ``groups`` (live groups in the view).
 """
 
 from __future__ import annotations
@@ -46,6 +56,24 @@ from pyetl_spark.cdc.ivm import IncrementalAgg, IncrementalDistinct
 from pyetl_spark.cdc.tableio import SnapshotTable
 
 
+def _open_view(
+    spark, view_dir, group_cols, sum_cols, min_cols, max_cols, sumsq_cols, distinct_col
+) -> tuple[IncrementalAgg | IncrementalDistinct, SnapshotTable]:
+    """The view and the table whose ledger holds its base-feed cursor —
+    for ``distinct_col`` (a chained count(DISTINCT col),
+    IncrementalDistinct) that is the inner multiplicity table."""
+    if distinct_col:
+        if sum_cols or min_cols or max_cols or sumsq_cols:
+            raise ValueError("--distinct-col is exclusive of sum/min/max/sumsq cols")
+        view = IncrementalDistinct(spark, view_dir, group_cols, distinct_col)
+        return view, view.inner.table
+    view = IncrementalAgg(
+        spark, view_dir, group_cols, sum_cols,
+        min_cols=min_cols, max_cols=max_cols, sumsq_cols=sumsq_cols
+    )
+    return view, view.table
+
+
 def consume(
     spark: SparkSession,
     base_dir: str,
@@ -58,22 +86,15 @@ def consume(
     distinct_col: str | None = None,
 ) -> dict:
     """Catch the view up to the base table's current version; returns a
-    summary dict (applied commit list, final view version, group count).
-    ``distinct_col`` switches the view to a chained count(DISTINCT col)
-    (IncrementalDistinct) — its base-feed ledger lives on the inner
-    multiplicity table, so the cursor below reads the right ledger."""
+    summary dict: ``base_version``, ``applied_now`` (the base commits
+    applied by this call) and ``view_version``. It reads no view rows
+    beyond the buckets the applies touch — :func:`main` prints the group
+    count once, at exit. ``distinct_col`` switches the view to a chained
+    count(DISTINCT col) (IncrementalDistinct)."""
     base = SnapshotTable(spark, base_dir)
-    if distinct_col:
-        if sum_cols or min_cols or max_cols or sumsq_cols:
-            raise ValueError("--distinct-col is exclusive of sum/min/max/sumsq cols")
-        view = IncrementalDistinct(spark, view_dir, group_cols, distinct_col)
-        ledger_table = view.inner.table
-    else:
-        view = IncrementalAgg(
-            spark, view_dir, group_cols, sum_cols,
-            min_cols=min_cols, max_cols=max_cols, sumsq_cols=sumsq_cols
-        )
-        ledger_table = view.table
+    view, ledger_table = _open_view(
+        spark, view_dir, group_cols, sum_cols, min_cols, max_cols, sumsq_cols, distinct_col
+    )
     applied = {
         int(b[1:])
         for b in ledger_table.committed_batches()
@@ -102,7 +123,6 @@ def consume(
         "base_version": current,
         "applied_now": pending,
         "view_version": ledger_table.current_version(),
-        "groups": view.state().count(),
     }
 
 
@@ -128,17 +148,18 @@ def main(argv: list[str]) -> int:
 
     spark = SparkSession.builder.appName("cdf-view").getOrCreate()
     try:
-        summary = consume(
-            spark,
-            args.base_dir,
-            args.view_dir,
+        cols = (
             [c for c in args.group_cols.split(",") if c],
             [c for c in args.sum_cols.split(",") if c],
             [c for c in args.min_cols.split(",") if c],
             [c for c in args.max_cols.split(",") if c],
-            sumsq_cols=[c for c in args.sumsq_cols.split(",") if c],
-            distinct_col=args.distinct_col,
+            [c for c in args.sumsq_cols.split(",") if c],
         )
+        summary = consume(
+            spark, args.base_dir, args.view_dir, *cols, distinct_col=args.distinct_col
+        )
+        view, _ = _open_view(spark, args.view_dir, *cols, args.distinct_col)
+        summary["groups"] = view.state().count()
         print(json.dumps(summary))
         return 0
     finally:

@@ -8,8 +8,15 @@ ADDITIVE per-group deltas (inserts/post-images count +1, deletes/pre-images
 count −1 — an update that moves a row between groups therefore debits the
 old group and credits the new one with no special casing).
 :class:`IncrementalAgg` folds those deltas into a persistent aggregate
-table: cost per apply ∝ the groups the batch touched (bucket-pruned state
-read + one small merge), never the size of the base table or of the view.
+table: cost per apply ∝ the groups the batch touched, never the size of the
+base table or of the view. The fold reads the live groups of the state
+buckets the deltas hash into, so its output IS those buckets' complete new
+content: it is committed as such (:meth:`SnapshotTable.replace_buckets`,
+the Iceberg ReplacePartitions analog) — one write job, with no second read,
+LWW aggregate or pre-pass of a generic merge. Groups whose count reaches
+zero are written as tombstones, so the view's own change feed emits
+``delete`` for them (chained views, :class:`IncrementalDistinct`, consume
+that feed).
 
 Sums are maintained in DECIMAL so incremental (+x then −x) arithmetic is
 exact — float sums drift under reordering, and a maintained view must stay
@@ -38,12 +45,14 @@ read at all.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from pyetl_spark.cdc.tableio import MergeStats, SnapshotTable
+from pyetl_spark.cdc.tableio import DELETED, SEQ, MergeStats, SnapshotTable, _bucket_col
 
 _SIGN = {
     "insert": 1,
@@ -171,17 +180,24 @@ class IncrementalAgg:
         batch_id: str,
         base: DataFrame | SnapshotTable | None = None,
     ) -> MergeStats:
-        """Fold one CDF slice into the view. Reads ONLY the state buckets
-        the slice's groups hash into (cost ∝ touched groups); emits
-        upserts for surviving groups and deletes for groups whose count
-        reaches zero. Idempotent per ``batch_id`` via the table ledger.
+        """Fold one CDF slice into the view and commit the result as the
+        new content of the state buckets the slice's groups hash into
+        (:meth:`SnapshotTable.replace_buckets`). Reads ONLY those buckets
+        (cost ∝ touched groups); a group the slice touched gets a fresh
+        ``_seq``, a group whose count reaches zero becomes a tombstone (so
+        the view's own change feed emits ``delete``), every other live
+        group of the bucket is carried over unchanged. Idempotent per
+        ``batch_id`` via the table ledger. While the view table is inside
+        a rescale window (``legacy`` buckets) the touched groups go
+        through :meth:`SnapshotTable.merge` instead, which migrates them.
 
         With ``min_cols``/``max_cols`` configured, pass ``base`` (the
         source at the slice's END version) whenever the slice may contain
         retractions — it is read only if some group's boundary value was
         actually retracted, and then only the dirty groups' rows."""
-        if self.table.is_committed(batch_id):
-            return MergeStats(batch_id, self.table.current_version(), 0, 0, 0, 0, skipped=True)
+        m = self.table.manifest()
+        if self.table.is_committed(batch_id, manifest=m):
+            return MergeStats(batch_id, m["version"], 0, 0, 0, 0, skipped=True)
         deltas = delta_aggregate(
             changes,
             self.group_cols,
@@ -190,95 +206,104 @@ class IncrementalAgg:
             max_cols=self.max_cols,
             sumsq_cols=self.sumsq_cols,
         )
-        # pin the (small) delta frame: bucket_ids collects from it, and the
-        # join below reuses it — without this the CDF diff recomputes twice
+        # pin the (small) delta frame: the fold below reuses it (without
+        # the pin the CDF diff would run again), and the job that pins it
+        # also observes the state buckets its groups hash into
+        bucket = _bucket_col(m.get("bucket_cols", m["keys"]), m["nbuckets"])
+        touched_obs = Observation()
+        deltas = deltas.observe(touched_obs, F.collect_set(bucket).alias("b"))
         deltas = deltas.localCheckpoint(eager=True)
-        touched = self.table.bucket_ids(deltas)
-        cur = self.table.read(buckets=touched)
+        touched = sorted(touched_obs.get["b"])
+        seq = self.table.max_seq() + 1
         sum_names = [f"sum_{c}" for c in self.sum_cols]
+        sumsq_names = [f"sumsq_{c}" for c in self.sumsq_cols]
         min_names = [f"min_{c}" for c in self.min_cols]
         max_names = [f"max_{c}" for c in self.max_cols]
-        sumsq_names = [f"sumsq_{c}" for c in self.sumsq_cols]
-        # (delta column, state column) pairs that fold by plain addition —
-        # sums of values and sums of squares share one code path
-        add_pairs = [
-            (f"d_sum_{c}", n) for c, n in zip(self.sum_cols, sum_names)
-        ] + [(f"d_sumsq_{c}", n) for c, n in zip(self.sumsq_cols, sumsq_names)]
-        if "count" not in cur.columns:  # first apply: empty-schema state
-            cur = deltas.select(
-                *self.group_cols,
-                F.lit(0).cast("long").alias("count"),
-                *[
-                    F.lit(0).cast(deltas.schema[d].dataType).alias(n)
-                    for d, n in add_pairs
-                ],
-                *[
-                    F.lit(None).cast(deltas.schema[f"ins_min_{c}"].dataType).alias(n)
-                    for c, n in zip(self.min_cols, min_names)
-                ],
-                *[
-                    F.lit(None).cast(deltas.schema[f"ins_max_{c}"].dataType).alias(n)
-                    for c, n in zip(self.max_cols, max_names)
-                ],
-            ).limit(0)
-        j = cur.join(deltas, on=self.group_cols, how="full")
-        # fold candidates + the boundary-hit flag (see module docstring:
-        # a retraction <= least(cur_min, ins_min) may have removed the
-        # minimum's carrier row — only those groups need the base table)
+        state_cols = [*self.group_cols, "count", *sum_names, *sumsq_names, *min_names, *max_names]
+        # the fold is ONE aggregate over (live state rows ∪ delta rows):
+        # counts and sums add, mins/maxes take least/greatest, and a state
+        # row brings its _seq, a delta row the __hit mark. del_min/del_max
+        # only come from the deltas (the boundary-hit test below).
+        fold_in = deltas.select(
+            *self.group_cols,
+            F.col("d_count").alias("count"),
+            *[F.col(f"d_sum_{c}").alias(n) for c, n in zip(self.sum_cols, sum_names)],
+            *[F.col(f"d_sumsq_{c}").alias(n) for c, n in zip(self.sumsq_cols, sumsq_names)],
+            *[F.col(f"ins_min_{c}").alias(n) for c, n in zip(self.min_cols, min_names)],
+            *[F.col(f"ins_max_{c}").alias(n) for c, n in zip(self.max_cols, max_names)],
+            *[F.col(f"del_min_{c}") for c in self.min_cols],
+            *[F.col(f"del_max_{c}") for c in self.max_cols],
+            F.lit(True).alias("__hit"),
+            F.lit(None).cast("long").alias("__seq"),
+        )
+        # the view's stored column types: the fold writes back the same ones
+        stored = (
+            {f.name: f.dataType for f in StructType.fromJson(json.loads(m["schema"])).fields}
+            if m.get("schema")
+            else {}
+        )
+        # live groups of the touched buckets, each with its own _seq
+        raw = self.table.resolved_raw(m["version"], buckets=touched)
+        if raw is not None:
+            live = raw.filter(~F.col(DELETED)).select(
+                *state_cols, F.lit(False).alias("__hit"), F.col(SEQ).alias("__seq")
+            )
+            fold_in = live.unionByName(fold_in, allowMissingColumns=True)
+        # one exchange, by state bucket: the fold groups on (bucket,
+        # group_cols), and replace_buckets' write reuses the partitioning
+        fold_in = fold_in.repartition(max(len(touched), 1), bucket)
+        folded = fold_in.groupBy(bucket, *self.group_cols).agg(
+            F.sum("count").alias("count"),
+            *[
+                F.sum(n).cast(stored.get(n, fold_in.schema[n].dataType)).alias(n)
+                for n in sum_names + sumsq_names
+            ],
+            *[F.min(n).alias(n) for n in min_names],
+            *[F.max(n).alias(n) for n in max_names],
+            *[F.min(f"del_min_{c}").alias(f"del_min_{c}") for c in self.min_cols],
+            *[F.max(f"del_max_{c}").alias(f"del_max_{c}") for c in self.max_cols],
+            F.max("__hit").alias("__hit"),
+            F.max("__seq").alias("__seq"),
+        )
+        # the boundary-hit flag (module docstring): a retraction <= the
+        # folded min (= least(cur_min, ins_min)) may have removed the
+        # minimum's carrier row — only those groups need the base table
         dirty = F.lit(False)
         for c, n in zip(self.min_cols, min_names):
-            cand = F.least(F.col(n), F.col(f"ins_min_{c}"))
-            dirty = dirty | F.coalesce(F.col(f"del_min_{c}") <= cand, F.lit(False))
+            dirty = dirty | F.coalesce(F.col(f"del_min_{c}") <= F.col(n), F.lit(False))
         for c, n in zip(self.max_cols, max_names):
-            cand = F.greatest(F.col(n), F.col(f"ins_max_{c}"))
-            dirty = dirty | F.coalesce(F.col(f"del_max_{c}") >= cand, F.lit(False))
-        folded = j.select(
-            *self.group_cols,
-            (
-                F.coalesce(F.col("count"), F.lit(0))
-                + F.coalesce(F.col("d_count"), F.lit(0))
-            ).alias("count"),
-            *[
-                (
-                    F.coalesce(F.col(n), F.lit(0))
-                    + F.coalesce(F.col(d), F.lit(0))
-                )
-                .cast(cur.schema[n].dataType if n in cur.columns else "decimal(28,6)")
-                .alias(n)
-                for d, n in add_pairs
-            ],
-            *[
-                F.least(F.col(n), F.col(f"ins_min_{c}")).alias(n)
-                for c, n in zip(self.min_cols, min_names)
-            ],
-            *[
-                F.greatest(F.col(n), F.col(f"ins_max_{c}")).alias(n)
-                for c, n in zip(self.max_cols, max_names)
-            ],
-            dirty.alias("__dirty"),
-        )
+            dirty = dirty | F.coalesce(F.col(f"del_max_{c}") >= F.col(n), F.lit(False))
+        folded = folded.select(*state_cols, dirty.alias("__dirty"), "__hit", "__seq")
         if self.min_cols or self.max_cols:
             folded = self._recompute_dirty(folded, base)
-        seq = self.table.max_seq() + 1
-        delta_rows = folded.select(
-            *self.group_cols,
-            "count",
-            *sum_names,
-            *sumsq_names,
-            *min_names,
-            *max_names,
-            F.when(F.col("count") <= 0, F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias("op"),
-            F.lit(seq).alias("seq"),
+        if m.get("legacy"):
+            # rescale window: merge() is the path that migrates the legacy
+            # buckets these groups may still live in
+            return self.table.merge(
+                folded.where("__hit").select(
+                    *state_cols,
+                    F.when(F.col("count") <= 0, F.lit("delete"))
+                    .otherwise(F.lit("upsert"))
+                    .alias("op"),
+                    F.lit(seq).alias("seq"),
+                ),
+                batch_id=batch_id,
+            )
+        rows = folded.select(
+            *state_cols,
+            F.when(F.col("__hit"), F.lit(seq))
+            .otherwise(F.col("__seq"))
+            .cast(stored.get(SEQ, "long"))
+            .alias(SEQ),
+            (F.col("count") <= 0).alias(DELETED),
         )
-        return self.table.merge(delta_rows, batch_id=batch_id)
+        return self.table.replace_buckets(rows, touched, m["version"], batch_id=batch_id)
 
     def _recompute_dirty(self, folded: DataFrame, base) -> DataFrame:
         """Replace fold candidates with base-table recomputes for the
         (usually empty) set of groups whose boundary value was retracted.
         folded is pinned first: it gates whether base is read at all, and
-        is reused by the merge — without the pin the CDF diff and the
+        is reused by the commit — without the pin the CDF diff and the
         state read would both run twice."""
         folded = folded.localCheckpoint(eager=True)
         min_names = [f"min_{c}" for c in self.min_cols]
@@ -309,16 +334,13 @@ class IncrementalAgg:
         # whose only non-null value was retracted has min NULL — coalesce
         # would wrongly resurrect the fold candidate)
         return j.select(
-            *self.group_cols,
-            "count",
-            *[f"sum_{c}" for c in self.sum_cols],
-            *[f"sumsq_{c}" for c in self.sumsq_cols],
             *[
-                F.when(F.col("__dirty"), F.col(f"rec_{n}"))
-                .otherwise(F.col(n))
-                .alias(n)
-                for n in min_names + max_names
-            ],
+                F.when(F.col("__dirty"), F.col(f"rec_{c}")).otherwise(F.col(c)).alias(c)
+                if c in min_names + max_names
+                else F.col(c)
+                for c in folded.columns
+                if c != "__dirty"
+            ]
         )
 
     def state(self) -> DataFrame:

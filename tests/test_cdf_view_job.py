@@ -128,3 +128,43 @@ def test_consume_sumsq_catchup_derives_avg_var(spark, tmp_path):
         r["grp"]: (r["count"], r["avg_x"], r["var_x"]) for r in v.stats().collect()
     }
     assert got == {"a": (1, 1.0, 0.0), "b": (1, 5.0, 0.0)}
+
+
+# Spark jobs of one consume() that catches a COUNT/SUM view up by one base
+# commit, measured on local[4] with 8 base and 16 view buckets: the change
+# feed + delta aggregate pinned in one job (which also observes the touched
+# view buckets), then one write of the folded buckets — no view merge and
+# no full view scan for a group count.
+CONSUME_JOBS = 6
+
+
+def test_consume_one_commit_job_budget(spark, tmp_path):
+    from pyetl_spark.cdc import write_event_batches
+
+    gen = dict(n_repos=30, paths_per_repo=20, seed=42)
+    d = str(tmp_path / "ev")
+    batches = write_event_batches(spark, d, 1200, n_batches=2, **gen)
+    read = [spark.read.parquet(b).withColumn("bytes", F.length("content").cast("long"))
+            for b in batches]
+    base_dir, view_dir = str(tmp_path / "base"), str(tmp_path / "view")
+    base = SnapshotTable.create(spark, base_dir, keys=["repo", "path"], nbuckets=8)
+    base.merge(read[0], batch_id="seed", prune=False)
+    consume(spark, base_dir, view_dir, ["repo"], ["bytes"])
+    base.merge(read[1], batch_id="b:1")
+    sc = spark.sparkContext
+    sc.setJobGroup("consume-budget", "one consume()")
+    try:
+        s = consume(spark, base_dir, view_dir, ["repo"], ["bytes"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s["applied_now"] == [base.current_version()]
+    jobs = len(sc.statusTracker().getJobIdsForGroup("consume-budget"))
+    assert 0 < jobs <= CONSUME_JOBS, jobs
+    from pyetl_spark.cdc.ivm import IncrementalAgg
+
+    view = IncrementalAgg(spark, view_dir, ["repo"], ["bytes"])
+    want = base.read().groupBy("repo").agg(F.count("*").alias("n"), F.sum("bytes").alias("s"))
+    assert {(r["repo"], r["n"], r["s"]) for r in want.collect()} == {
+        (r["repo"], r["count"], int(r["sum_bytes"])) for r in view.state().collect()
+    }

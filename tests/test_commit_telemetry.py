@@ -151,8 +151,9 @@ def test_expiry_keeps_metrics_and_lineage(spark, tmp_path):
 
 # Spark jobs of one pruned micro-batch, measured on local[4] with 8 buckets:
 # rules-free transform -> merge (bucket-count pre-pass with the batch facts,
-# base read + LWW + write, commit); telemetry adds none.
-MICRO_BATCH_JOBS = 6
+# base read + LWW + write sharing one exchange by bucket, commit); telemetry
+# adds none.
+MICRO_BATCH_JOBS = 5
 
 
 def test_micro_batch_job_budget(spark, tmp_path):

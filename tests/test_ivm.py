@@ -466,3 +466,158 @@ def test_sumsq_reopen_definition_guard(spark, tmp_path):
     IncrementalAgg(spark, str(tmp_path / "v"), ["grp"], ["x"], sumsq_cols=["x"])
     with pytest.raises(ValueError, match="view definitions"):
         IncrementalAgg(spark, str(tmp_path / "v"), ["grp"], ["x"])
+
+
+# --------------------------------------------- view commits and change feed
+
+
+def _view_feed(view, v0, v1):
+    return sorted(
+        (r["grp"], r["_change_type"]) for r in view.table.changes(v0, v1).collect()
+    )
+
+
+def _assert_verified(*tables):
+    for t in tables:
+        report = t.verify(all_versions=True)
+        assert report["ok"], report["issues"]
+
+
+def test_view_feed_emits_delete_then_insert(spark, tmp_path):
+    """A group whose count reaches 0 is written as a tombstone, so the view
+    table's own change feed emits ``delete``; re-adding it emits
+    ``insert``. The group sharing its (only) bucket is carried over
+    unchanged and emits nothing."""
+    base = _base(spark, tmp_path)
+    view = IncrementalAgg(spark, str(tmp_path / "v"), ["grp"], ["x"], nbuckets=1)
+    base.merge(_delta(spark, [(1, "a", 1.0, "upsert", 1), (2, "b", 2.0, "upsert", 2)]), "b0")
+    view.apply(base.changes(0), "b0")
+    steps = [
+        ([(1, "a", 0.0, "delete", 3)], [("a", "delete")]),
+        ([(3, "a", 4.0, "upsert", 4)], [("a", "insert")]),
+        ([(3, "a", 5.0, "upsert", 5)], [("a", "update_postimage"), ("a", "update_preimage")]),
+    ]
+    for i, (rows, want) in enumerate(steps, start=1):
+        b0, v0 = base.current_version(), view.table.current_version()
+        base.merge(_delta(spark, rows), f"b{i}")
+        stats = view.apply(base.changes(b0), f"b{i}")
+        assert stats.version == view.table.current_version() == v0 + 1
+        assert view.table.manifest()["summary"]["operation"] == "replace_buckets"
+        assert _view_feed(view, v0, stats.version) == want, f"step {i}"
+        assert _view_state(view) == _recompute(base), f"step {i}"
+        _assert_verified(view.table)
+    # the watermark advanced with every commit, one _seq per apply
+    assert view.table.max_seq() == view.table.manifest()["max_seq"] == 3
+
+
+def test_incremental_distinct_delete_readd_matches_recompute(spark, tmp_path):
+    """IncrementalDistinct over a delete / re-add sequence: the outer view
+    consumes the inner table's feed, so every tombstone (delete) and
+    re-insert there must reach it exactly once."""
+    from pyetl_spark.cdc.ivm import IncrementalDistinct
+
+    base = _base(spark, tmp_path)
+    d = IncrementalDistinct(spark, str(tmp_path / "d"), ["grp"], "x", nbuckets=2)
+    batches = [
+        [(1, "a", 1.0, "upsert", 1), (2, "a", 2.0, "upsert", 2), (3, "b", 1.0, "upsert", 3)],
+        [(1, "a", 0.0, "delete", 4)],  # (a, 1.0) leaves: a 2→1
+        [(4, "a", 1.0, "upsert", 5)],  # (a, 1.0) back: a 1→2
+        [(2, "a", 0.0, "delete", 6), (4, "a", 0.0, "delete", 7)],  # a empties
+        [(5, "a", 3.0, "upsert", 8), (3, "b", 0.0, "delete", 9)],  # a back, b empties
+        [(6, "b", 1.0, "upsert", 10)],  # b back with its old value
+    ]
+    v_prev = 0
+    for i, rows in enumerate(batches):
+        base.merge(_delta(spark, rows), batch_id=f"b{i}")
+        v_now = base.current_version()
+        d.apply(base.changes(v_prev, v_now), batch_id=f"b{i}")
+        v_prev = v_now
+        got = {r["grp"]: r["n_distinct"] for r in d.state().collect()}
+        assert got == _distinct_recompute(base), f"diverged after batch {i}"
+        _assert_verified(d.inner.table, d.outer.table)
+    assert got == {"a": 1, "b": 1}
+
+
+def test_view_in_rescale_window_commits_through_merge(spark, tmp_path):
+    """A view table with a non-empty ``legacy`` window keeps committing
+    through merge() — the only path that migrates legacy buckets — and
+    still equals a from-scratch recompute; once compacted, applies
+    replace buckets again. replace_buckets itself refuses the window."""
+    base = _base(spark, tmp_path)
+    view = IncrementalAgg(spark, str(tmp_path / "v"), ["grp"], ["x"], nbuckets=2)
+    rows = [(k, f"g{k % 5}", float(k), "upsert", k) for k in range(1, 11)]
+    base.merge(_delta(spark, rows), "b0")
+    view.apply(base.changes(0), "b0")
+    view.table.rescale(4)  # lazy: every stored group now sits in a legacy bucket
+    assert view.table.manifest()["legacy"]
+    b0 = base.current_version()
+    base.merge(_delta(spark, [(1, "g1", 0.0, "delete", 11), (11, "g9", 2.5, "upsert", 12)]), "b1")
+    with pytest.raises(ValueError, match="rescale window"):
+        view.table.replace_buckets(view.table.read_raw().limit(0), [0], view.table.current_version())
+    stats = view.apply(base.changes(b0), "b1")
+    assert view.table.manifest()["summary"]["operation"] == "merge"
+    assert stats.buckets_migrated > 0
+    assert _view_state(view) == _recompute(base)
+    _assert_verified(view.table)
+
+    view.table.compact()  # closes the window
+    assert not view.table.manifest().get("legacy")
+    b1 = base.current_version()
+    base.merge(_delta(spark, [(2, "g2", 7.0, "upsert", 13)]), "b2")
+    view.apply(base.changes(b1), "b2")
+    assert view.table.manifest()["summary"]["operation"] == "replace_buckets"
+    assert _view_state(view) == _recompute(base)
+    _assert_verified(view.table)
+
+
+def test_view_with_mor_dirty_buckets_folds_resolved_state(spark, tmp_path):
+    """A view table whose buckets carry unresolved merge-on-read appends
+    (``dirty``): the fold reads their LWW-resolved state, the rewrite
+    clears the flag on the buckets it replaces, and the view still equals
+    a from-scratch recompute."""
+    base = _base(spark, tmp_path)
+    view = IncrementalAgg(spark, str(tmp_path / "v"), ["grp"], ["x"], nbuckets=2)
+    rows = [(k, f"g{k % 6}", float(k), "upsert", k) for k in range(1, 13)]
+    base.merge(_delta(spark, rows), "b0")
+    view.apply(base.changes(0), "b0")
+    # append a second, identical version of every live group (higher _seq)
+    state = view.state().withColumns(
+        {"op": F.lit("upsert"), "seq": F.lit(view.table.max_seq() + 1).cast("long")}
+    )
+    view.table.merge(state, batch_id="mor-copy", mode="mor")
+    dirty = view.table.dirty_buckets()
+    assert dirty
+    b0 = base.current_version()
+    base.merge(_delta(spark, [(1, "g1", 0.0, "delete", 13), (2, "g2", 9.0, "upsert", 14)]), "b1")
+    view.apply(base.changes(b0), "b1")
+    touched = set(view.table.bucket_ids(spark.createDataFrame([("g1",), ("g2",)], ["grp"])))
+    assert not set(view.table.dirty_buckets()) & touched
+    assert _view_state(view) == _recompute(base)
+    _assert_verified(view.table)
+
+
+def test_view_committed_by_merge_keeps_its_stored_types(spark, tmp_path):
+    """A view table whose state merge() wrote with an int ``seq`` (how
+    views were committed before replace_buckets) keeps folding: a commit
+    that only touches empty buckets writes the stored ``_seq`` type back."""
+    base = _base(spark, tmp_path)
+    view = IncrementalAgg(spark, str(tmp_path / "v"), ["grp"], ["x"], nbuckets=4)
+    base.merge(_delta(spark, [(1, "a", 1.0, "upsert", 1)]), "b0")
+    view.table.merge(
+        spark.createDataFrame(
+            [("a", 1, Decimal("1.000000"), "upsert", 0)],
+            "grp string, count long, sum_x decimal(28,6), op string, seq int",
+        ),
+        batch_id="b0",
+    )
+    bucket = {g: view.table.bucket_ids(spark.createDataFrame([(g,)], ["grp"]))[0]
+              for g in "abcdefgh"}
+    other = next(g for g in "bcdefgh" if bucket[g] != bucket["a"])
+    b0 = base.current_version()
+    base.merge(_delta(spark, [(2, other, 2.0, "upsert", 2)]), "b1")
+    view.apply(base.changes(b0), "b1")
+    assert view.table.manifest()["summary"]["operation"] == "replace_buckets"
+    seq_type = [f for f in view.table.read_raw().schema.fields if f.name == "_seq"][0]
+    assert seq_type.dataType.simpleString() == "int"
+    assert _view_state(view) == _recompute(base)
+    _assert_verified(view.table)
